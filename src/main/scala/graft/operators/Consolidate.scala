@@ -46,9 +46,18 @@ object Consolidate {
     * "no dedup" (the reference's BPD path, `:1767-1768`).
     */
   def apply(dfs: Seq[DataFrame], dedupKeys: Seq[String], ordering: Seq[Column])
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) =
+    KeepLastDedup.split(numbered(dfs, dedupKeys, ordering))
+
+  /** union → [[KeepLastDedup.numbered]]: one frame that holds both kept
+    * (`__rn` = 1) and dups (`__rn` > 1), split with
+    * [[KeepLastDedup.split]]. With no `dedupKeys` every row is kept (the
+    * constant `__rn` folds away when the frame is not persisted).
+    */
+  def numbered(dfs: Seq[DataFrame], dedupKeys: Seq[String], ordering: Seq[Column])
+      : DataFrame = {
     val u = union(dfs)
-    if (dedupKeys.isEmpty) (u, u.limit(0))
-    else KeepLastDedup(u, dedupKeys, ordering)
+    if (dedupKeys.isEmpty) u.withColumn("__rn", org.apache.spark.sql.functions.lit(1))
+    else KeepLastDedup.numbered(u, dedupKeys, ordering)
   }
 }

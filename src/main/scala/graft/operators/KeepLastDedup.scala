@@ -32,10 +32,20 @@ object KeepLastDedup {
     *   ascending-nulls-last" is "first in descending-nulls-first".
     * @return (kept, dups): kept has exactly one row per key
     */
-  def apply(df: DataFrame, keys: Seq[String], ordering: Seq[Column]): (DataFrame, DataFrame) = {
+  def apply(df: DataFrame, keys: Seq[String], ordering: Seq[Column]): (DataFrame, DataFrame) =
+    split(numbered(df, keys, ordering))
+
+  /** `df` plus the window's `__rn` column: 1 on the row each key keeps,
+    * 2.. on its duplicates. A caller with several consumers of kept and
+    * dups can persist this one frame so the window shuffles once.
+    */
+  def numbered(df: DataFrame, keys: Seq[String], ordering: Seq[Column]): DataFrame = {
     val w  = Window.partitionBy(keys.map(col).toIndexedSeq: _*)
       .orderBy(ordering.map(_.desc_nulls_first).toIndexedSeq: _*)
-    val rn = df.withColumn("__rn", row_number().over(w))
-    (rn.filter(col("__rn") === 1).drop("__rn"), rn.filter(col("__rn") > 1).drop("__rn"))
+    df.withColumn("__rn", row_number().over(w))
   }
+
+  /** (kept, dups) of a [[numbered]] frame, without the `__rn` column. */
+  def split(rn: DataFrame): (DataFrame, DataFrame) =
+    (rn.filter(col("__rn") === 1).drop("__rn"), rn.filter(col("__rn") > 1).drop("__rn"))
 }

@@ -55,11 +55,11 @@ object Main {
       return errors.exitCode
     }
 
-    val res = Pipeline.run(spark, inputDir, exportDir, ctx.runStamp, trainHours, history)
-    res.errors.foreach(e => errors.record("input", s"${e.path}: ${e.message}"))
-    res.unclassified.foreach(p => errors.record("classify", s"no report header found: $p"))
-
-    res.results.foreach { r =>
+    // The load runs inside Pipeline.run, while the report's consolidated
+    // frame is pinned; its errors are recorded after the input and
+    // classify errors, as the summary lists them.
+    val loadErrors = Seq.newBuilder[String]
+    def load(r: Pipeline.ReportResult): Unit = {
       val name = r.report.schema.name
       loadDateColumn(r.report).foreach { dateCol =>
         try {
@@ -68,12 +68,18 @@ object Main {
             s"$targetDir/${name.replace(' ', '_').toLowerCase}",
             s"$targetDir/audit", name, ctx.runStamp)
           if (report.gaps > 0)
-            errors.record("load", s"$name: ${report.gaps} gap(s) between date streaks")
+            loadErrors += s"$name: ${report.gaps} gap(s) between date streaks"
         } catch {
-          case e: Exception => errors.record("load", s"$name: ${e.getMessage}")
+          case e: Exception => loadErrors += s"$name: ${e.getMessage}"
         }
       }
     }
+
+    val res = Pipeline.run(spark, inputDir, exportDir, ctx.runStamp, trainHours, history,
+      load = load)
+    res.errors.foreach(e => errors.record("input", s"${e.path}: ${e.message}"))
+    res.unclassified.foreach(p => errors.record("classify", s"no report header found: $p"))
+    loadErrors.result().foreach(errors.record("load", _))
 
     // Archive only inputs whose every unit was read successfully (failed
     // inputs stay for the next run, as in the reference). Error paths may

@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.classify.HeaderSniffer
 import graft.operators.{Consolidate, KeepLastDedup}
@@ -20,8 +21,12 @@ import graft.sinks.SideChannelCsv
   * sheet is logged and skipped, the batch proceeds) and `:1662-1875` (main).
   *
   * Scale notes: classification collects ≤50 rows per file (the reference's
-  * own bound); everything else is one lazy plan per report type — the
-  * union'd scan, clean, dedup window, and sinks all execute distributed.
+  * own bound); everything else executes distributed. Each report type's
+  * union → clean → keep-last window is computed ONCE: the row-numbered
+  * frame is persisted while the duplicates and snapshot channels and the
+  * caller's load read it (the reference writes all three from one
+  * in-memory frame, `:1752-1797`), and released before `run` returns.
+  * The rejects channel is its own single pass over the readers.
   */
 object Pipeline {
 
@@ -230,13 +235,23 @@ object Pipeline {
     * @param parallelism driver-pool width for BOTH fan-outs (classify and
     *   the per-input reads) — the reads are usually the heavier phase, so
     *   they get the same knob `classifyAll` exposes; 1 = sequential.
+    * @param load called once per report after its side channels, while
+    *   the report's consolidated frame is still persisted, so a load of
+    *   `kept` reads the pin instead of re-running the readers and the
+    *   window. The frames in the returned [[RunResult]] are unpinned and
+    *   recompute when used.
     */
   def run(spark: SparkSession, inputDir: String, exportDir: String, runStamp: String,
       trainHours: => DataFrame, history: => DataFrame,
       sortMode: Consolidate.SortMode = Consolidate.SortMode.Lexicographic,
       batchedGuard: Boolean = false,
-      parallelism: Int = DriverPoolParallelism): RunResult = {
+      parallelism: Int = DriverPoolParallelism,
+      load: ReportResult => Unit = _ => ()): RunResult = {
     val (classified, unclassified) = classifyAll(spark, inputDir, parallelism)
+    // Each by-name dimension reads a file: read them at most once per run,
+    // and not at all when the batch has no Train List input.
+    lazy val hours = trainHours
+    lazy val hist = history
 
     val errors = Seq.newBuilder[InputError]
     val results = ReportType.all.flatMap { report =>
@@ -249,7 +264,7 @@ object Pipeline {
         // error attribution) is preserved by parMap.
         val reads = parMap(mine.zipWithIndex.toSeq, parallelism) {
           case (ci, ord) =>
-            (ci, readInput(spark, ci, ord, trainHours, history,
+            (ci, readInput(spark, ci, ord, hours, hist,
               eagerEmptyGuard = !batchedGuard))
         }
         reads.collect { case (_, Left(e)) => e }.foreach(errors += _)
@@ -306,21 +321,23 @@ object Pipeline {
           val ordering = Consolidate.ordering(
             report.schema.sortKeys.filter(k => ok.head.good.columns.contains(k)),
             mode) ++ tiebreak
-          val (kept0, dups0) = Consolidate(ok.map(_.good), report.schema.dedupKeys, ordering)
-          val kept = kept0.drop("__file_ord", "__row_ord")
-          val dups = dups0.drop("__file_ord", "__row_ord")
-          val rejects = Consolidate.union(ok.map(_.rejects)).drop("__file_ord", "__row_ord")
-          Some(ReportResult(report, kept, dups, rejects, None))
+          val pin = Consolidate.numbered(ok.map(_.good), report.schema.dedupKeys, ordering)
+            .drop("__file_ord", "__row_ord")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            val (kept, dups) = KeepLastDedup.split(pin)
+            val rejects = Consolidate.union(ok.map(_.rejects)).drop("__file_ord", "__row_ord")
+            val r = ReportResult(report, kept, dups, rejects, None)
+            // K1-K3 side channels, then the caller's load
+            val name = report.schema.name
+            SideChannelCsv.writeErrors(rejects, exportDir, name, runStamp)
+            SideChannelCsv.writeDuplicates(dups, exportDir, name, runStamp)
+            SideChannelCsv.writeSnapshot(kept, exportDir, name, runStamp)
+            load(r)
+            Some(r)
+          } finally { pin.unpersist(); () }
         }
       }
-    }
-
-    // K1-K3 side channels per report.
-    results.foreach { r =>
-      val name = r.report.schema.name
-      SideChannelCsv.writeErrors(r.rejects, exportDir, name, runStamp)
-      SideChannelCsv.writeDuplicates(r.duplicates, exportDir, name, runStamp)
-      SideChannelCsv.writeSnapshot(r.kept, exportDir, name, runStamp)
     }
     RunResult(results, errors.result(), unclassified)
   }

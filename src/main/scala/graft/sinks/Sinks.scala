@@ -143,7 +143,6 @@ object PartitionOverwriteSink {
     // persist so the upstream chain runs once, release before returning.
     val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       val colocated =
         if (filesPerDay == 1) pinned.repartition(col(dateCol))
         else pinned.repartition(col(dateCol),
@@ -157,16 +156,34 @@ object PartitionOverwriteSink {
       // cluster). The AUDIT append stays strictly AFTER the write
       // commits: an audit row asserts a completed load, and a write
       // failure must not leave one behind (K6's failure semantics).
-      // Job descriptions are thread-local, so each job stays labeled.
+      // Job descriptions and tags are thread-local, so each job stays
+      // labeled (under the caller's inherited job group), and a failed
+      // write can cancel exactly the streak job by its tag.
+      val streakTag = s"graft-load-streaks-${java.util.UUID.randomUUID}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
       val streaksFut = scala.concurrent.Future {
         spark.sparkContext.setJobDescription(s"load $table: day streaks")
+        spark.sparkContext.addJobTag(streakTag)
         DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
           .orderBy(col("streak_start")).collect()
       }(scala.concurrent.ExecutionContext.fromExecutorService(pool))
 
       try {
-        colocated.write.mode(SaveMode.Overwrite).partitionBy(dateCol).parquet(targetDir)
+        // per-write dynamic overwrite: replaces exactly the days in the
+        // batch without touching the session's overwrite mode
+        try colocated.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(dateCol).parquet(targetDir)
+        catch {
+          case e: Throwable =>
+            // the streak job still reads the pin: stop it and wait for it
+            // to end, so no job outlives the load and the pin is not
+            // released under a running job; its own error is moot
+            spark.sparkContext.cancelJobsWithTag(streakTag)
+            scala.util.Try(scala.concurrent.Await.ready(streaksFut,
+              scala.concurrent.duration.Duration(1, "hour")))
+            throw e
+        }
 
         // G1 — streaks over the loaded days; tiny (O(days)) driver list.
         val streakRows = scala.concurrent.Await.result(streaksFut,

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{SparkCounts, SparkSuite}
 import graft.classify.HeaderSniffer
 import graft.readers.{BookingPaymentReader, OccupancyReader, TrainListReader}
 import graft.schema.{ReportType, Schemas}
@@ -15,6 +15,14 @@ import graft.sinks.PartitionOverwriteSink
   */
 class PipelineSpec extends SparkSuite {
   import spark.implicits._
+
+  /** Most Spark jobs `Main.run` may issue on `writeMultiReportInputs`.
+    * Measured: 48 or 49, because each load's day-streak query runs
+    * beside its write, and adaptive execution plans it in 3 or 4 jobs
+    * depending on which of the two builds the load's cached input first.
+    * It was 69 when every sink re-ran the readers and the window.
+    */
+  private val MainRunJobs = 50
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(name)
@@ -36,6 +44,59 @@ class PipelineSpec extends SparkSuite {
     // 24 cells in schema order; non-mandatory cells filled with "1"
     val m = Map(0 -> date, 1 -> od, 5 -> train, 6 -> cls, 14 -> reserved, 8 -> quota)
     (0 until 24).map(i => m.getOrElse(i, "1")).mkString(",")
+  }
+
+  private def tlRow(dep: String, train: String, ticket: String): String = {
+    val h = Schemas.trainList.header
+    val m = Map("Departure Date" -> dep, "Train Number" -> train, "Ticket Number" -> ticket)
+    h.map(c => m.getOrElse(c, "1")).mkString(",")
+  }
+
+  private def tlCsv(rows: Seq[String]): String =
+    (Schemas.trainList.header.mkString(",") +: rows).mkString("\n")
+
+  /** Train-hours and ticket-history dimensions covering train T1 and
+    * tickets tk1, tk2.
+    */
+  private def tlDims() = (
+    Seq(("T1", "09:30:00")).toDF("train_number", "departure_time"),
+    Seq(("tk1", java.sql.Timestamp.valueOf("2024-01-01 08:00:00")),
+      ("tk2", java.sql.Timestamp.valueOf("2024-01-02 08:00:00")))
+      .toDF("ticket_number", "operation_date_time"))
+
+  /** Two Occupancy and two Train List inputs. Each report has a key
+    * repeated across its two files; Occupancy also has one reject row.
+    */
+  private def writeMultiReportInputs(in: String): Unit = {
+    Files.writeString(Paths.get(s"$in/occ_a.csv"), occCsv(Seq(
+      occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q1"),
+      occRow("2024-01-02 00:00:00", "CD", "T2", "C2", "6", "q2"),
+      occRow("", "AB", "T1", "C1", "9", "q0")), junkRows = 0))
+    Files.writeString(Paths.get(s"$in/occ_b.csv"), occCsv(Seq(
+      occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "7", "q3")), junkRows = 0))
+    Files.writeString(Paths.get(s"$in/tl_a.csv"), tlCsv(Seq(
+      tlRow("2024-01-01 10:00:00", "T1", "tk1"),
+      tlRow("2024-01-02 10:00:00", "T1", "tk2"))))
+    Files.writeString(Paths.get(s"$in/tl_b.csv"), tlCsv(Seq(
+      tlRow("2024-01-03 10:00:00", "T1", "tk1"))))
+  }
+
+  /** Unpersists what earlier suites left in the shared session (some
+    * operators keep cached plans and RDDs after they return), so the
+    * persisted-state laws below see only the leftovers of their own call.
+    */
+  private def startFromEmptyCache(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assertNothingRunningOrPersisted()
+  }
+
+  /** No Spark job is running, and no plan or RDD is persisted. */
+  private def assertNothingRunningOrPersisted(): Unit = {
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("S3/S4: classifyCsv finds the occupancy header behind junk rows") {
@@ -122,18 +183,10 @@ class PipelineSpec extends SparkSuite {
   test("pipeline run: TL path with dims; missing train number isolates the file") {
     val in = tmpDir("graft-tl-in")
     val out = tmpDir("graft-tl-out")
-    def tlRow(dep: String, train: String, ticket: String): String = {
-      val h = Schemas.trainList.header
-      val m = Map("Departure Date" -> dep, "Train Number" -> train, "Ticket Number" -> ticket)
-      h.map(c => m.getOrElse(c, "1")).mkString(",")
-    }
-    val header = Schemas.trainList.header.mkString(",")
     // file A: train T1 exists in the dim
-    Files.writeString(Paths.get(s"$in/a.csv"),
-      (Seq(header) :+ tlRow("2024-01-01 10:00:00", "T1", "tk1")).mkString("\n"))
+    Files.writeString(Paths.get(s"$in/a.csv"), tlCsv(Seq(tlRow("2024-01-01 10:00:00", "T1", "tk1"))))
     // file B: train T9 missing from the dim → input isolated as an error
-    Files.writeString(Paths.get(s"$in/b.csv"),
-      (Seq(header) :+ tlRow("2024-01-02 10:00:00", "T9", "tk2")).mkString("\n"))
+    Files.writeString(Paths.get(s"$in/b.csv"), tlCsv(Seq(tlRow("2024-01-02 10:00:00", "T9", "tk2"))))
     val hours = Seq(("T1", "09:30:00")).toDF("train_number", "departure_time")
     val hist = Seq(("tk1", java.sql.Timestamp.valueOf("2024-01-01 08:00:00")))
       .toDF("ticket_number", "operation_date_time")
@@ -194,18 +247,7 @@ class PipelineSpec extends SparkSuite {
         occRow("2024-01-02 00:00:00", "GH", "T4", "C4", "8", "q")), junkRows = 0))
       in
     }
-    def countJobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(1000) } // listener bus drains asynchronously
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get
-    }
+    def countJobs(body: => Unit): Int = SparkCounts.of(spark)(body)._2.jobs
 
     val inA = writeInputs()
     var resBatched: Pipeline.RunResult = null
@@ -384,6 +426,92 @@ class PipelineSpec extends SparkSuite {
     assert(Files.exists(Paths.get(s"$in/junk.csv")))
   }
 
+  test("Pipeline.run: the load hook reads the pinned consolidation; returned frames are unpinned and recompute") {
+    startFromEmptyCache()
+    val in = tmpDir("graft-pin-in")
+    writeMultiReportInputs(in)
+    val (hours, hist) = tlDims()
+    // plans built from a NEW Dataset, so the returned frames' own plans
+    // are never resolved against the pin
+    def readsPin(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.select("*").queryExecution.withCachedData.toString.contains("InMemoryRelation")
+    val seen = Seq.newBuilder[(ReportType, Boolean, Boolean, Long)]
+    val res = Pipeline.run(spark, in, tmpDir("graft-pin-out"), "20240101T000000", hours, hist,
+      load = r => seen += ((r.report, readsPin(r.kept), readsPin(r.duplicates), r.kept.count())))
+    assert(seen.result() === Seq(
+      (ReportType.TrainList, true, true, 2L), (ReportType.Occupancy, true, true, 2L)))
+    assertNothingRunningOrPersisted()
+    res.results.foreach { r =>
+      assert(!readsPin(r.kept) && !readsPin(r.duplicates))
+      assert(r.kept.count() === 2 && r.duplicates.count() === 1 && r.kept.collect().length === 2)
+    }
+    assertNothingRunningOrPersisted()
+  }
+
+  test("Pipeline.run reads the by-name dimensions at most once per run, and not without a Train List input") {
+    val in = tmpDir("graft-dims-in")
+    writeMultiReportInputs(in)
+    val (hoursDf, histDf) = tlDims()
+    val hoursReads = new java.util.concurrent.atomic.AtomicInteger
+    val histReads = new java.util.concurrent.atomic.AtomicInteger
+    def hours = { hoursReads.incrementAndGet(); hoursDf }
+    def hist = { histReads.incrementAndGet(); histDf }
+    val res = Pipeline.run(spark, in, tmpDir("graft-dims-out"), "20240101T000000", hours, hist)
+    assert(res.errors.isEmpty)
+    // two Train List inputs, one read of each dimension
+    assert(hoursReads.get === 1 && histReads.get === 1)
+
+    val occOnly = tmpDir("graft-dims-occ")
+    Files.writeString(Paths.get(s"$occOnly/a.csv"), occCsv(Seq(
+      occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q1")), junkRows = 0))
+    Pipeline.run(spark, occOnly, tmpDir("graft-dims-out2"), "20240101T000000", hours, hist)
+    assert(hoursReads.get === 1 && histReads.get === 1)
+  }
+
+  test("Main.run: each report consolidates once — snapshot equals loaded rows, job count pinned, nothing left persisted") {
+    startFromEmptyCache()
+    val in = tmpDir("graft-once-in")
+    val exp = tmpDir("graft-once-exp")
+    val tgt = tmpDir("graft-once-tgt")
+    writeMultiReportInputs(in)
+    val (hours, hist) = tlDims()
+    val (code, counts) = SparkCounts.of(spark) {
+      Main.run(spark, in, exp, tgt, tmpDir("graft-once-arc"), hours, hist,
+        s"$tgt/version_control.txt")
+    }
+    assert(code === 0)
+    assertNothingRunningOrPersisted()
+    for ((name, table) <- Seq("Train List" -> "train_list", "Occupancy" -> "occupancy")) {
+      val loaded = spark.read.parquet(s"$tgt/$table")
+      val snapDir = new java.io.File(exp).listFiles().map(_.getPath)
+        .filter(_.contains(s"$name data exported")).toSeq match { case Seq(d) => d }
+      val cols = spark.read.option("header", "true").csv(snapDir).columns.toSeq
+      val snap = spark.read.option("header", "true")
+        .schema(org.apache.spark.sql.types.StructType(cols.map(loaded.schema(_))))
+        .csv(snapDir)
+      val back = loaded.select(cols.map(col): _*)
+      assert(snap.count() === 2)
+      assert(snap.exceptAll(back).isEmpty && back.exceptAll(snap).isEmpty, name)
+    }
+    assert(counts.jobs <= MainRunJobs, counts)
+  }
+
+  test("Main.run: a failed load leaves no running job and nothing persisted; other reports still load") {
+    startFromEmptyCache()
+    val in = tmpDir("graft-lfail-in")
+    val tgt = tmpDir("graft-lfail-tgt")
+    writeMultiReportInputs(in)
+    // the Occupancy target is a regular file, so its partitioned write fails
+    Files.writeString(Paths.get(s"$tgt/occupancy"), "not a table")
+    val (hours, hist) = tlDims()
+    val code = Main.run(spark, in, tmpDir("graft-lfail-exp"), tgt, tmpDir("graft-lfail-arc"),
+      hours, hist, s"$tgt/version_control.txt")
+    assert(code === 1)
+    assert(Files.isRegularFile(Paths.get(s"$tgt/occupancy")))
+    assert(spark.read.parquet(s"$tgt/train_list").count() === 2)
+    assertNothingRunningOrPersisted()
+  }
+
   test("bucketed tables: co-located join plans without a shuffle exchange") {
     import graft.sinks.BucketedTables
     val dir = tmpDir("graft-bkt")
@@ -440,6 +568,39 @@ class PipelineSpec extends SparkSuite {
     assert(spark.read.parquet(s"$target/t").count() === 2)
     // audit: one row per day per run
     assert(spark.read.parquet(s"$audit/a").count() === 4)
+  }
+
+  test("K4-K6: dynamic overwrite is set per write — session mode untouched, days outside the batch kept") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    val target = tmpDir("graft-sink-mode")
+    try {
+      spark.conf.set(key, "STATIC")
+      PartitionOverwriteSink.load(spark, Seq(("2024-01-01", "a"), ("2024-01-02", "b")).toDF("day", "v"),
+        "day", s"$target/t", s"$target/a", "t", "run1")
+      PartitionOverwriteSink.load(spark, Seq(("2024-01-02", "b2"), ("2024-01-03", "c")).toDF("day", "v"),
+        "day", s"$target/t", s"$target/a", "t", "run2")
+      assert(spark.conf.get(key) === "STATIC")
+      val back = spark.read.parquet(s"$target/t")
+        .select(col("day").cast("string"), col("v")).as[(String, String)].collect().sorted.toSeq
+      assert(back === Seq(("2024-01-01", "a"), ("2024-01-02", "b2"), ("2024-01-03", "c")))
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("K4-K6: a failed write stops the day-streak job before the load returns") {
+    startFromEmptyCache()
+    val dir = tmpDir("graft-sink-fail")
+    Files.writeString(Paths.get(s"$dir/t"), "not a table")
+    // slow rows keep the streak job running while the write fails
+    val slow = udf((i: Long) => { Thread.sleep(250); i.toInt })
+    val df = spark.range(0, 8, 1, 2)
+      .select(date_add(lit("2024-01-01").cast("date"), slow(col("id"))).cast("string").as("day"), col("id").as("v"))
+    intercept[Exception] {
+      PartitionOverwriteSink.load(spark, df, "day", s"$dir/t", s"$dir/a", "t", "run1")
+    }
+    assertNothingRunningOrPersisted()
+    // no audit row for a load that did not commit
+    assert(!Files.exists(Paths.get(s"$dir/a")))
   }
 
   test("sharded export: one sorted file per shard, membership portable, rewrite byte-identical") {
