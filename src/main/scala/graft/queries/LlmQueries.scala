@@ -965,13 +965,14 @@ object LlmQueries {
 
     // The DEPLOYED-configuration serve clock (VERDICT r19 item 3):
     // q194 freezes cells=4 BY DESIGN (it measures the artifact across
-    // scales); production deploys √N cells — the lever IvfServeScale
-    // measured (serve slope 0.047 at √N vs 0.51 frozen). This gate is
-    // the standing bench entry for that deployed shape: index built
-    // once per (session, sfDir) at cells = ⌊√N⌋, and every timed pass
-    // runs the full serve CYCLE — the staleness audit (the r18
-    // trainedN check an operator runs before trusting an index) then
-    // the partition-pruned fixed-100-probe serve. A fresh √N index
+    // scales); production deploys √N cells — the lever the IvfServeScale
+    // microbench (last at commit 537e9d8) measured (serve slope 0.047 at
+    // √N vs 0.51 frozen). This gate is the standing bench entry for
+    // that deployed shape: index built once per (session, sfDir) at
+    // cells = ⌊√N⌋, and every timed pass runs the full serve CYCLE —
+    // the staleness audit (the r18 trainedN check an operator runs
+    // before trusting an index) then the partition-pruned
+    // fixed-100-probe serve. A fresh √N index
     // can never read stale (idealCells = cells by construction), so
     // the require is a tripwire, not a tautology: it fails loudly if
     // the memoized index outlives a corpus swap. The oracle replays

@@ -2,11 +2,14 @@ package graft.sinks
 
 import java.util.Base64
 
+import scala.concurrent.duration.DurationInt
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.control.DriverPool
 import graft.functions.BloomAgg
 
 /** File-level data skipping — the lakehouse read-path complement of the
@@ -997,23 +1000,13 @@ object DataSkipping {
       } finally reader.close()
     }
     // footer reads are tiny but per-file; overlap them so a many-file
-    // patch is not serialized on driver round-trips
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, paths.size)))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      // bounded, not Inf: a wedged footer read should surface as a
-      // failure (caught below → scan fallback), never a driver hang;
-      // footer reads are KB-sized, so the bound is orders of magnitude
-      // above any legitimate read
-      val all = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          paths.map(p => scala.concurrent.Future(fileStats(p)))),
-        scala.concurrent.duration.Duration(1, "hour"))
-      if (all.exists(_.isEmpty)) None
-      else Some(all.flatMap(_.get).sortBy(_.file).toIndexedSeq)
-    } finally pool.shutdown()
+    // patch is not serialized on driver round-trips. Bounded: a wedged
+    // KB-sized footer read surfaces as a failure (caught below → scan
+    // fallback), never a driver hang.
+    val all = DriverPool.traverse("footer-stats", paths, parallelism = 16,
+      timeout = 1.hour)(fileStats)
+    if (all.exists(_.isEmpty)) None
+    else Some(all.flatMap(_.get).sortBy(_.file).toIndexedSeq)
   } catch {
     // any structural surprise (missing footer, exotic writer) — the
     // exact scan is always available and always right
@@ -2224,26 +2217,14 @@ object DataSkipping {
     // list — so they run under a bounded pool instead of one at a
     // time through the driver (guide §2.6; the compactPartitions
     // pattern). Commit protocol unchanged: marker first, every copy
-    // lands before the manifest commit, a failure (rethrown after the
-    // pool drains) leaves marker-branded debris a retry sweeps.
-    if (m.files.nonEmpty) {
-      val srcFs = src.getFileSystem(conf)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, m.files.size))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val tries = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(m.files.map(f =>
-            scala.concurrent.Future(scala.util.Try {
-              org.apache.hadoop.fs.FileUtil.copy(
-                srcFs, new Path(src, f.file),
-                fs, new Path(dst, f.file),
-                false, true, conf): Unit
-            }))),
-          scala.concurrent.duration.Duration(6, "hours"))
-        tries.foreach(t => if (t.isFailure) throw t.failed.get)
-      } finally pool.shutdown()
+    // lands before the manifest commit, a failure leaves
+    // marker-branded debris a retry sweeps.
+    val srcFs = src.getFileSystem(conf)
+    DriverPool.traverse("export", m.files, parallelism = 16, timeout = 6.hours) { f =>
+      org.apache.hadoop.fs.FileUtil.copy(
+        srcFs, new Path(src, f.file),
+        fs, new Path(dst, f.file),
+        false, true, conf): Unit
     }
     writeManifestFile(spark, destDir, m)
     fs.delete(marker, false): Unit

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.control.DriverPool
+
 /** Targeted delete-by-key over a stats-manifested parquet directory
   * ([[DataSkipping]]): the erasure/right-to-be-forgotten primitive.
   *
@@ -399,20 +401,9 @@ object Erasure {
     * are fast either way, so the pool only ever helps.
     */
   private def parquetRowCounts(paths: IndexedSeq[Path],
-      conf: org.apache.hadoop.conf.Configuration): Map[Path, Long] = {
-    if (paths.isEmpty) return Map.empty
-    if (paths.size == 1) return Map(paths.head -> parquetRowCount(paths.head, conf))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, paths.size))
-    try {
-      val futures = paths.map { p =>
-        p -> pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = parquetRowCount(p, conf)
-        })
-      }
-      futures.map { case (p, f) => p -> f.get() }.toMap
-    } finally pool.shutdownNow(): Unit
-  }
+      conf: org.apache.hadoop.conf.Configuration): Map[Path, Long] =
+    paths.zip(DriverPool.traverse("row-counts", paths, parallelism = 16)(
+      parquetRowCount(_, conf))).toMap
 
   /** Post-commit physical delete of files a drop pass emptied (and,
     * for [[deleteRange]], the listing-decided wholly-doomed set) — the

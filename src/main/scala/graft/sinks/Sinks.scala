@@ -1,8 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.control.DriverPool
 import graft.operators.DateStreaks
 
 /** K1-K3 — side-channel CSV sinks (error rows, duplicates, snapshot).
@@ -156,61 +157,44 @@ object PartitionOverwriteSink {
       // cluster). The AUDIT append stays strictly AFTER the write
       // commits: an audit row asserts a completed load, and a write
       // failure must not leave one behind (K6's failure semantics).
-      // Job descriptions and tags are thread-local, so each job stays
-      // labeled (under the caller's inherited job group), and a failed
-      // write can cancel exactly the streak job by its tag.
-      val streakTag = s"graft-load-streaks-${java.util.UUID.randomUUID}"
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      val streaksFut = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription(s"load $table: day streaks")
-        spark.sparkContext.addJobTag(streakTag)
-        DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
-          .orderBy(col("streak_start")).collect()
-      }(scala.concurrent.ExecutionContext.fromExecutorService(pool))
+      // Per-write dynamic overwrite replaces exactly the days in the
+      // batch without touching the session's overwrite mode. If either
+      // call fails, the other's job is cancelled and waited for, so no
+      // job outlives the load or reads the pin after its release.
+      val streakRows = DriverPool.traverse(s"load-$table", Seq("write", "streaks"), parallelism = 2) {
+        case "write" =>
+          colocated.write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(dateCol).parquet(targetDir)
+          Array.empty[Row]
+        case _ =>
+          DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
+            .orderBy(col("streak_start")).collect()
+      }.last
 
-      try {
-        // per-write dynamic overwrite: replaces exactly the days in the
-        // batch without touching the session's overwrite mode
-        try colocated.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(dateCol).parquet(targetDir)
-        catch {
-          case e: Throwable =>
-            // the streak job still reads the pin: stop it and wait for it
-            // to end, so no job outlives the load and the pin is not
-            // released under a running job; its own error is moot
-            spark.sparkContext.cancelJobsWithTag(streakTag)
-            scala.util.Try(scala.concurrent.Await.ready(streaksFut,
-              scala.concurrent.duration.Duration(1, "hour")))
-            throw e
-        }
+      // G1 — streaks over the loaded days; tiny (O(days)) driver list.
+      val streaks = streakRows.toIndexedSeq.map(r =>
+        (r.getDate(0).toString, r.getDate(1).toString))
+      // Streaks are maximal consecutive runs, so expanding them enumerates
+      // exactly the distinct loaded days — no second scan needed.
+      val days = streaks.flatMap { case (a, b) =>
+        Iterator.iterate(java.time.LocalDate.parse(a))(_.plusDays(1))
+          .takeWhile(!_.isAfter(java.time.LocalDate.parse(b)))
+          .map(_.toString).toSeq
+      }.sorted
 
-        // G1 — streaks over the loaded days; tiny (O(days)) driver list.
-        val streakRows = scala.concurrent.Await.result(streaksFut,
-          scala.concurrent.duration.Duration(1, "hour"))
-        val streaks = streakRows.toIndexedSeq.map(r =>
-          (r.getDate(0).toString, r.getDate(1).toString))
-        // Streaks are maximal consecutive runs, so expanding them enumerates
-        // exactly the distinct loaded days — no second scan needed.
-        val days = streaks.flatMap { case (a, b) =>
-          Iterator.iterate(java.time.LocalDate.parse(a))(_.plusDays(1))
-            .takeWhile(!_.isAfter(java.time.LocalDate.parse(b)))
-            .map(_.toString).toSeq
-        }.sorted
+      // K6 — one audit row per loaded day. The driver-local day list
+      // parallelizes over defaultParallelism, which would append one
+      // tiny file PER CORE per load; coalesce(1) lands the audit batch
+      // as a single file (audit tables are day-count-sized at any scale).
+      import spark.implicits._
+      days.toDF("period")
+        .coalesce(1)
+        .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
+          lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
+        .write.mode(SaveMode.Append).parquet(auditDir)
 
-        // K6 — one audit row per loaded day. The driver-local day list
-        // parallelizes over defaultParallelism, which would append one
-        // tiny file PER CORE per load; coalesce(1) lands the audit batch
-        // as a single file (audit tables are day-count-sized at any scale).
-        import spark.implicits._
-        days.toDF("period")
-          .coalesce(1)
-          .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
-            lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
-          .write.mode(SaveMode.Append).parquet(auditDir)
-
-        LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
-      } finally pool.shutdown()
+      LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
     } finally pinned.unpersist()
   }
 }
