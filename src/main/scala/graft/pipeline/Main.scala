@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
@@ -56,9 +58,10 @@ object Main {
     }
 
     // The load runs inside Pipeline.run, while the report's consolidated
-    // frame is pinned; its errors are recorded after the input and
-    // classify errors, as the summary lists them.
-    val loadErrors = Seq.newBuilder[String]
+    // frame is pinned, and the reports' loads may run at once: each keeps
+    // its own error entry. They are recorded in report order after the
+    // input and classify errors, as the summary lists them.
+    val loadErrors = TrieMap.empty[ReportType, String]
     def load(r: Pipeline.ReportResult): Unit = {
       val name = r.report.schema.name
       loadDateColumn(r.report).foreach { dateCol =>
@@ -68,9 +71,9 @@ object Main {
             s"$targetDir/${name.replace(' ', '_').toLowerCase}",
             s"$targetDir/audit", name, ctx.runStamp)
           if (report.gaps > 0)
-            loadErrors += s"$name: ${report.gaps} gap(s) between date streaks"
+            loadErrors.put(r.report, s"$name: ${report.gaps} gap(s) between date streaks")
         } catch {
-          case e: Exception => loadErrors += s"$name: ${e.getMessage}"
+          case e: Exception => loadErrors.put(r.report, s"$name: ${e.getMessage}")
         }
       }
     }
@@ -79,7 +82,7 @@ object Main {
       load = load)
     res.errors.foreach(e => errors.record("input", s"${e.path}: ${e.message}"))
     res.unclassified.foreach(p => errors.record("classify", s"no report header found: $p"))
-    loadErrors.result().foreach(errors.record("load", _))
+    ReportType.all.flatMap(loadErrors.get).foreach(errors.record("load", _))
 
     // Archive only inputs whose every unit was read successfully (failed
     // inputs stay for the next run, as in the reference). Error paths may

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.io.File
 
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -27,7 +29,10 @@ import graft.sinks.SideChannelCsv
   * frame is persisted while the duplicates and snapshot channels and the
   * caller's load read it (the reference writes all three from one
   * in-memory frame, `:1752-1797`), and released before `run` returns.
-  * The rejects channel is its own single pass over the readers.
+  * The rejects channel is its own single pass over the readers. The three
+  * report types share nothing but the audit table, so their chains run
+  * beside each other on the driver pool; the reference handles them one
+  * after another.
   */
 object Pipeline {
 
@@ -61,9 +66,9 @@ object Pipeline {
       .map(_.getPath).sorted.toIndexedSeq
   }
 
-  /** Driver-pool width for the classify/read fan-out: the per-(file,
-    * sheet) sniffs and xlsx parses are independent, driver-side, and
-    * each a mix of zip IO and StAX CPU — a bounded pool is the engine's
+  /** Driver-pool width for the classify, report and read fan-outs: the
+    * per-(file, sheet) sniffs and xlsx parses are independent, driver-side,
+    * and each a mix of zip IO and StAX CPU — a bounded pool is the engine's
     * answer to the reference's dormant tiered read
     * (`Old/reports_exporter_v0.82.ipynb:484-560`). Capped: the driver is
     * shared with Spark's scheduler threads. Safe because each unit is
@@ -208,13 +213,19 @@ object Pipeline {
     *   type — same isolation semantics, N driver round trips → 1. Keep
     *   the default (eager, reference-faithful per-sheet check) for small
     *   batches; flip it when input counts grow to the thousands.
-    * @param parallelism driver-pool width for BOTH fan-outs (classify and
-    *   the per-input reads) — the reads are usually the heavier phase, so
-    *   they get the same knob `classifyAll` exposes; 1 = sequential.
+    * @param parallelism driver-pool width for all three fan-outs: the
+    *   classify, the report types (each report's read → consolidate →
+    *   side channels → load chain runs beside the others'), and each
+    *   report's per-input reads; 1 = the whole run is sequential, in
+    *   report order, on the caller's thread.
     * @param load called once per report after its side channels, while
     *   the report's consolidated frame is still persisted, so a load of
     *   `kept` reads the pin instead of re-running the readers and the
-    *   window. The frames in the returned [[RunResult]] are unpinned and
+    *   window. It may be called concurrently for different reports, so
+    *   it must be thread-safe. If it (or any step of a report) throws,
+    *   the other reports still run to completion, and `run` then rethrows
+    *   the first failure in report order with the later ones suppressed.
+    *   The frames in the returned [[RunResult]] are unpinned and
     *   recompute when used.
     */
   def run(spark: SparkSession, inputDir: String, exportDir: String, runStamp: String,
@@ -229,10 +240,10 @@ object Pipeline {
     lazy val hours = trainHours
     lazy val hist = history
 
-    val errors = Seq.newBuilder[InputError]
-    val results = ReportType.all.flatMap { report =>
+    def runReport(report: ReportType): (Option[ReportResult], Seq[InputError]) = {
+      val errors = Seq.newBuilder[InputError]
       val mine = classified.filter(_.report == report)
-      if (mine.isEmpty) None
+      val result = if (mine.isEmpty) None
       else {
         // per-(file, sheet) reads fan out on the driver pool: the xlsx
         // parses and per-input guard actions are the serial cost for a
@@ -314,7 +325,18 @@ object Pipeline {
           } finally { pin.unpersist(); () }
         }
       }
+      (result, errors.result())
     }
-    RunResult(results, errors.result(), unclassified)
+
+    // A report's failure is kept as a value, so it neither cancels nor
+    // skips another report: a load stopped mid-protocol could leave a
+    // committed write without its audit rows.
+    val outcomes = DriverPool.traverse("report", ReportType.all, parallelism)(r => Try(runReport(r)))
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: later => later.foreach(first.addSuppressed); throw first
+      case _              =>
+    }
+    val done = outcomes.map(_.get)
+    RunResult(done.flatMap(_._1), done.flatMap(_._2), unclassified)
   }
 }

@@ -121,9 +121,14 @@ object PartitionOverwriteSink {
 
   final case class LoadReport(days: Seq[String], streaks: Seq[(String, String)], gaps: Int)
 
+  /** Serializes the audit appends of this driver's concurrent loads. */
+  private object AuditLock
+
   /** Overwrite `targetDir`'s partitions for exactly the days present in
     * `df[dateCol]`, append one audit row per day to `auditDir`, and report
     * the streak structure (the reference warns on gaps, `:1321-1325`).
+    * Loads of distinct targets may run at once in one driver, sharing an
+    * `auditDir`: their audit appends take turns.
     *
     * @param dateCol a "yyyy-MM-dd"-formatted string or DATE column
     * @param filesPerDay output files per day partition. A partitionBy
@@ -187,12 +192,16 @@ object PartitionOverwriteSink {
       // parallelizes over defaultParallelism, which would append one
       // tiny file PER CORE per load; coalesce(1) lands the audit batch
       // as a single file (audit tables are day-count-sized at any scale).
+      // Appends to one directory share the committer's `_temporary` dir,
+      // which the first to commit deletes under the others.
       import spark.implicits._
-      days.toDF("period")
-        .coalesce(1)
-        .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
-          lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
-        .write.mode(SaveMode.Append).parquet(auditDir)
+      AuditLock.synchronized {
+        days.toDF("period")
+          .coalesce(1)
+          .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
+            lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
+          .write.mode(SaveMode.Append).parquet(auditDir)
+      }
 
       LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
     } finally pinned.unpersist()

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -435,10 +438,12 @@ class PipelineSpec extends SparkSuite {
     // are never resolved against the pin
     def readsPin(df: org.apache.spark.sql.DataFrame): Boolean =
       df.select("*").queryExecution.withCachedData.toString.contains("InMemoryRelation")
-    val seen = Seq.newBuilder[(ReportType, Boolean, Boolean, Long)]
+    // hooks of different reports may run at once: record thread-safely,
+    // compare in report order
+    val seen = new ConcurrentLinkedQueue[(ReportType, Boolean, Boolean, Long)]
     val res = Pipeline.run(spark, in, tmpDir("graft-pin-out"), "20240101T000000", hours, hist,
-      load = r => seen += ((r.report, readsPin(r.kept), readsPin(r.duplicates), r.kept.count())))
-    assert(seen.result() === Seq(
+      load = r => { seen.add((r.report, readsPin(r.kept), readsPin(r.duplicates), r.kept.count())); () })
+    assert(seen.asScala.toSeq.sortBy(s => ReportType.all.indexOf(s._1)) === Seq(
       (ReportType.TrainList, true, true, 2L), (ReportType.Occupancy, true, true, 2L)))
     assertNothingRunningOrPersisted()
     res.results.foreach { r =>
@@ -510,6 +515,53 @@ class PipelineSpec extends SparkSuite {
     assert(Files.isRegularFile(Paths.get(s"$tgt/occupancy")))
     assert(spark.read.parquet(s"$tgt/train_list").count() === 2)
     assertNothingRunningOrPersisted()
+  }
+
+  private final class HookFailure(msg: String) extends RuntimeException(msg)
+
+  test("Pipeline.run: a throwing load hook neither cancels nor skips the other reports; run rethrows it") {
+    startFromEmptyCache()
+    val in = tmpDir("graft-iso-in")
+    writeMultiReportInputs(in)
+    val (hours, hist) = tlDims()
+    val occDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    intercept[HookFailure] {
+      Pipeline.run(spark, in, tmpDir("graft-iso-out"), "20240101T000000", hours, hist,
+        load = r => r.report match {
+          case ReportType.TrainList => throw new HookFailure("train list")
+          case _ => assert(r.kept.count() === 2); occDone.set(true)
+        })
+    }
+    assert(occDone.get, "the Occupancy hook did not run to completion")
+    assertNothingRunningOrPersisted()
+
+    // both throw: the first in report order wins, the later is suppressed
+    val e = intercept[HookFailure] {
+      Pipeline.run(spark, in, tmpDir("graft-iso-out2"), "20240101T000000", hours, hist,
+        load = r => throw new HookFailure(r.report.schema.name))
+    }
+    assert(e.getMessage === "Train List")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("Occupancy"))
+    assertNothingRunningOrPersisted()
+  }
+
+  test("Pipeline.run: report chains overlap on the driver pool; parallelism 1 runs them in order on the caller") {
+    val in = tmpDir("graft-overlap-in")
+    writeMultiReportInputs(in)
+    val (hours, hist) = tlDims()
+    // each hook waits until both are inside: a serial loop times out here
+    val bothIn = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[(ReportType, Boolean)]
+    Pipeline.run(spark, in, tmpDir("graft-overlap-out"), "20240101T000000", hours, hist,
+      load = r => { bothIn.countDown(); met.add((r.report, bothIn.await(30, TimeUnit.SECONDS))); () })
+    assert(met.asScala.toSeq.sortBy(m => ReportType.all.indexOf(m._1)) ===
+      Seq((ReportType.TrainList, true), (ReportType.Occupancy, true)))
+
+    val me = Thread.currentThread()
+    val calls = new ConcurrentLinkedQueue[(ReportType, Thread)]
+    Pipeline.run(spark, in, tmpDir("graft-overlap-out1"), "20240101T000000", hours, hist,
+      parallelism = 1, load = r => { calls.add((r.report, Thread.currentThread())); () })
+    assert(calls.asScala.toSeq === Seq((ReportType.TrainList, me), (ReportType.Occupancy, me)))
   }
 
   test("bucketed tables: co-located join plans without a shuffle exchange") {
@@ -601,6 +653,19 @@ class PipelineSpec extends SparkSuite {
     assertNothingRunningOrPersisted()
     // no audit row for a load that did not commit
     assert(!Files.exists(Paths.get(s"$dir/a")))
+  }
+
+  test("K6: concurrent loads into one audit directory keep every audit row") {
+    val dir = tmpDir("graft-sink-conc")
+    val tables = (0 until 8).map(i => s"t$i")
+    val reports = graft.control.DriverPool.traverse("audit-law", tables, parallelism = 8) { t =>
+      val days = Seq.tabulate(5)(d => f"2024-01-${d + 1}%02d")
+      PartitionOverwriteSink.load(spark, days.map(d => (d, t)).toDF("day", "v"),
+        "day", s"$dir/$t", s"$dir/audit", t, "run1")
+    }
+    val audit = spark.read.parquet(s"$dir/audit")
+    assert(audit.count() === reports.map(_.days.size).sum)
+    assert(audit.select("table").distinct().as[String].collect().sorted.toSeq === tables)
   }
 
   test("sharded export: one sorted file per shard, membership portable, rewrite byte-identical") {
