@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.time.LocalDate
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,6 +17,9 @@ import org.apache.spark.sql.functions._
   * safe at any scale: it runs over *distinct dates*, which for a fact table
   * partitioned by day is O(days) — thousands of rows even at 100 TB — and
   * the distinct() before it is a proper distributed aggregate.
+  *
+  * [[local]] is the same rule on a day list already on the driver, in the
+  * reference's own loop shape; both return the same islands.
   */
 object DateStreaks {
 
@@ -34,4 +39,16 @@ object DateStreaks {
         (datediff(max(col("d")), min(col("d"))) + 1).as("n_days"))
       .drop("__grp")
   }
+
+  /** The islands of an ascending day list on the driver, in order.
+    * Repeated days are merged; an empty list has no islands.
+    *
+    * @return (streak_start, streak_end) per island
+    */
+  def local(sortedDays: Seq[LocalDate]): Seq[(LocalDate, LocalDate)] =
+    sortedDays.foldLeft(Vector.empty[(LocalDate, LocalDate)]) {
+      case (done :+ ((start, end)), d) if !d.isAfter(end.plusDays(1)) =>
+        done :+ ((start, d))
+      case (done, d) => done :+ ((d, d))
+    }
 }

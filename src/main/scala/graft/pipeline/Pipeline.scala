@@ -128,17 +128,6 @@ object Pipeline {
     (all.collect { case Right(c) => c }, all.collect { case Left(p) => p })
   }
 
-  /** C2 — dispatch one classified input to its reader. Any throw is
-    * captured (C3) and the input skipped.
-    *
-    * Big workbooks route to the DISTRIBUTED xlsx parse (S6): at or
-    * above `xlsxDistributedBytes` (default
-    * [[graft.sources.XlsxDistributed.SingleBookDistributedBytes]]) the
-    * sheet parses in an executor task instead of on the driver pool —
-    * identical frame either way (PipelineSpec pins it), so the
-    * threshold trades driver memory/CPU for a task dispatch, never
-    * semantics.
-    */
   /** Workbook size for the distributed-parse routing decision, resolved
     * through the Hadoop FileSystem of the path's SCHEME — `java.io.File`
     * answers 0 for any non-local path (HDFS/S3), which would silently
@@ -153,9 +142,19 @@ object Pipeline {
     catch { case _: java.io.IOException => 0L }
   }
 
+  /** C2 — dispatch one classified input to its reader. Any throw is
+    * captured (C3) and the input skipped.
+    *
+    * Big workbooks route to the DISTRIBUTED xlsx parse (S6): at or
+    * above `xlsxDistributedBytes` (default
+    * [[graft.sources.XlsxDistributed.SingleBookDistributedBytes]]) the
+    * sheet parses in an executor task instead of on the driver pool —
+    * identical frame either way (PipelineSpec pins it), so the
+    * threshold trades driver memory/CPU for a task dispatch, never
+    * semantics.
+    */
   def readInput(spark: SparkSession, input: ClassifiedInput,
       fileOrd: Int, trainHours: => DataFrame, history: => DataFrame,
-      eagerEmptyGuard: Boolean = true,
       xlsxDistributedBytes: Long =
         graft.sources.XlsxDistributed.SingleBookDistributedBytes)
       : Either[InputError, ReaderOutput] =
@@ -190,29 +189,19 @@ object Pipeline {
       // like any other failure. This is a deliberate per-input action
       // (limit-1 count), matching the reference's per-sheet shape[0]
       // check — the only eager work in the otherwise-lazy per-report plan.
-      // With `eagerEmptyGuard=false` the check is deferred to run()'s
-      // single union-level count (one job for a whole batch of inputs).
-      if (eagerEmptyGuard)
-        out.filterOrElse(!_.good.isEmpty,
-          InputError(input.display, EmptyBatchMessage))
-      else out
+      out.filterOrElse(!_.good.isEmpty, InputError(input.display, EmptyBatchMessage))
     } catch {
       case e: Exception => Left(InputError(input.display, String.valueOf(e.getMessage)))
     }
+
+  val EmptyBatchMessage = "empty batch: no rows survived cleaning (P3 guard)"
 
   /** Full run over a directory of inputs (CSV files and xlsx workbooks).
     * Readers carry the tiebreaker columns through to consolidation, where
     * the dedup window orders by (report sort keys, file ordinal, row
     * ordinal) — exact pandas stable-sort keep-last parity — and drops
     * them from the outputs.
-    */
-  val EmptyBatchMessage = "empty batch: no rows survived cleaning (P3 guard)"
-
-  /** @param batchedGuard defer the P3 empty-input check from one Spark
-    *   action per input to ONE count job over the tagged union per report
-    *   type — same isolation semantics, N driver round trips → 1. Keep
-    *   the default (eager, reference-faithful per-sheet check) for small
-    *   batches; flip it when input counts grow to the thousands.
+    *
     * @param parallelism driver-pool width for all three fan-outs: the
     *   classify, the report types (each report's read → consolidate →
     *   side channels → load chain runs beside the others'), and each
@@ -230,8 +219,6 @@ object Pipeline {
     */
   def run(spark: SparkSession, inputDir: String, exportDir: String, runStamp: String,
       trainHours: => DataFrame, history: => DataFrame,
-      sortMode: Consolidate.SortMode = Consolidate.SortMode.Lexicographic,
-      batchedGuard: Boolean = false,
       parallelism: Int = DriverPoolParallelism,
       load: ReportResult => Unit = _ => ()): RunResult = {
     val (classified, unclassified) = classifyAll(spark, inputDir, parallelism)
@@ -250,64 +237,16 @@ object Pipeline {
         // workbook batch; order (and so the D1 fileOrd tiebreaker and
         // error attribution) is preserved by the pool.
         val reads = DriverPool.traverse("read", mine.zipWithIndex.toSeq, parallelism) {
-          case (ci, ord) =>
-            (ci, readInput(spark, ci, ord, hours, hist,
-              eagerEmptyGuard = !batchedGuard))
+          case (ci, ord) => readInput(spark, ci, ord, hours, hist)
         }
-        reads.collect { case (_, Left(e)) => e }.foreach(errors += _)
-        val okPairs = reads.collect { case (ci, Right(o)) => (ci, o) }
-        val ok =
-          if (!batchedGuard) okPairs.map(_._2)
-          else {
-            // P3 batched: which inputs still have rows, in ONE job.
-            // RDD union + take(1) per partition: each partition's lazy
-            // iterator stops at its first surviving row (no full counts),
-            // and the RDD action runs as a single shuffle-free job (a
-            // DataFrame union of limit(1)s would become one AQE stage
-            // job per branch).
-            def batchedPresent(): Set[Int] =
-              if (okPairs.isEmpty) Set.empty
-              else {
-                val marked = okPairs.zipWithIndex.map { case ((_, o), i) =>
-                  o.good.select(lit(i).as("__i")).rdd.mapPartitions(_.take(1))
-                }
-                spark.sparkContext.union(marked)
-                  .map(_.getInt(0)).collect().toSet
-              }
-            try {
-              val present = batchedPresent()
-              okPairs.zipWithIndex.flatMap { case ((ci, o), i) =>
-                if (present(i)) Some(o)
-                else { errors += InputError(ci.display, EmptyBatchMessage); None }
-              }
-            } catch {
-              case _: Exception =>
-                // the combined job cannot attribute an execution-time
-                // failure to an input — fall back to the eager per-input
-                // guard so C3 isolation still holds (one bad input must
-                // not sink the batch)
-                okPairs.flatMap { case (ci, o) =>
-                  try {
-                    if (!o.good.isEmpty) Some(o)
-                    else { errors += InputError(ci.display, EmptyBatchMessage); None }
-                  } catch {
-                    case e: Exception =>
-                      errors += InputError(ci.display, String.valueOf(e.getMessage))
-                      None
-                  }
-                }
-            }
-          }
+        reads.collect { case Left(e) => e }.foreach(errors += _)
+        val ok = reads.collect { case Right(o) => o }
         if (ok.isEmpty) None
         else {
           val tiebreak = Seq(col("__file_ord"), col("__row_ord"))
-          // The numeric "fixed" mode only applies to occupancy's numeric-
-          // string keys; date/timestamp sort keys keep their native order.
-          val mode = if (report == ReportType.Occupancy) sortMode
-            else Consolidate.SortMode.Lexicographic
           val ordering = Consolidate.ordering(
             report.schema.sortKeys.filter(k => ok.head.good.columns.contains(k)),
-            mode) ++ tiebreak
+            Consolidate.SortMode.Lexicographic) ++ tiebreak
           val pin = Consolidate.numbered(ok.map(_.good), report.schema.dedupKeys, ordering)
             .drop("__file_ord", "__row_ord")
             .persist(StorageLevel.MEMORY_AND_DISK)

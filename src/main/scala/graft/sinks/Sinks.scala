@@ -1,9 +1,10 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import java.time.LocalDate
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.control.DriverPool
 import graft.operators.DateStreaks
 
 /** K1-K3 — side-channel CSV sinks (error rows, duplicates, snapshot).
@@ -114,8 +115,9 @@ object SideChannelCsv {
   * (reload replaces, never duplicates) with no driver-sequenced DELETEs.
   * The streaks still drive the reference's gap warning and the audit trail.
   *
-  * Scale: the only collect is the distinct-day list (O(days) — bounded at
-  * any fact size); the data path is a straight partitioned parquet write.
+  * Scale: the distinct days ride the write as an observed metric (O(days)
+  * — bounded at any fact size); the data path is a straight partitioned
+  * parquet write, and the input is read once.
   */
 object PartitionOverwriteSink {
 
@@ -130,80 +132,48 @@ object PartitionOverwriteSink {
     * Loads of distinct targets may run at once in one driver, sharing an
     * `auditDir`: their audit appends take turns.
     *
+    * The partitioned write is the only action on `df`: the distinct days
+    * are an [[org.apache.spark.sql.Observation]] on that write, and the
+    * streaks are derived from them on the driver. The write repartitions
+    * on the day, so each day is written by one task as one file (a
+    * partitionBy write without it opens one file per task and day). A
+    * failed write throws before any audit row is written: an audit row
+    * asserts a committed load.
+    *
     * @param dateCol a "yyyy-MM-dd"-formatted string or DATE column
-    * @param filesPerDay output files per day partition. A partitionBy
-    *   write WITHOUT co-location opens one file per (task, day) — N
-    *   tasks × D days of tiny files, the classic small-files failure
-    *   (at a 1000-executor scale-out that is literally millions of
-    *   files per load). The default repartitions on the day, so each
-    *   day is written by exactly one task as one well-sized file; raise
-    *   it when single days are too large for one task — rows then
-    *   spread over a deterministic day-bucket key (hash of the row, no
-    *   rand(): retries must not reshuffle data between committed files).
     */
   def load(spark: SparkSession, df: DataFrame, dateCol: String,
-      targetDir: String, auditDir: String, table: String, runStamp: String,
-      user: String = "graft", filesPerDay: Int = 1): LoadReport = {
-    require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    // The frame is consumed by two actions (write + streak collect);
-    // persist so the upstream chain runs once, release before returning.
-    val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val colocated =
-        if (filesPerDay == 1) pinned.repartition(col(dateCol))
-        else pinned.repartition(col(dateCol),
-          pmod(hash(pinned.columns.map(col).toIndexedSeq: _*), lit(filesPerDay)))
+      targetDir: String, auditDir: String, table: String, runStamp: String): LoadReport = {
+    // Unique per call: loads of different reports run at once.
+    val observed = Observation()
+    df.observe(observed, collect_set(to_date(col(dateCol)).cast("string")).as("days"))
+      .repartition(col(dateCol))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(dateCol).parquet(targetDir)
 
-      // The STREAK COLLECT and the target write are independent
-      // consumers of the pin, so the (small) streak job runs on a
-      // driver thread UNDER the write (guide §2.6 "overlap independent
-      // jobs" — the partitioned write's wall time is the per-day
-      // directory fan-out, not data volume, so the tail idles the
-      // cluster). The AUDIT append stays strictly AFTER the write
-      // commits: an audit row asserts a completed load, and a write
-      // failure must not leave one behind (K6's failure semantics).
-      // Per-write dynamic overwrite replaces exactly the days in the
-      // batch without touching the session's overwrite mode. If either
-      // call fails, the other's job is cancelled and waited for, so no
-      // job outlives the load or reads the pin after its release.
-      val streakRows = DriverPool.traverse(s"load-$table", Seq("write", "streaks"), parallelism = 2) {
-        case "write" =>
-          colocated.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(dateCol).parquet(targetDir)
-          Array.empty[Row]
-        case _ =>
-          DateStreaks(pinned.select(to_date(col(dateCol)).as("d")), "d")
-            .orderBy(col("streak_start")).collect()
-      }.last
+    // Read only after the write returned: a failed write never completes
+    // the observation. An empty input observes no `days` entry at all.
+    val days = observed.get.get("days").toSeq
+      .flatMap(_.asInstanceOf[scala.collection.Seq[String]]).sorted
+    val streaks = DateStreaks.local(days.map(LocalDate.parse))
+      .map { case (a, b) => (a.toString, b.toString) }
 
-      // G1 — streaks over the loaded days; tiny (O(days)) driver list.
-      val streaks = streakRows.toIndexedSeq.map(r =>
-        (r.getDate(0).toString, r.getDate(1).toString))
-      // Streaks are maximal consecutive runs, so expanding them enumerates
-      // exactly the distinct loaded days — no second scan needed.
-      val days = streaks.flatMap { case (a, b) =>
-        Iterator.iterate(java.time.LocalDate.parse(a))(_.plusDays(1))
-          .takeWhile(!_.isAfter(java.time.LocalDate.parse(b)))
-          .map(_.toString).toSeq
-      }.sorted
+    // K6 — one audit row per loaded day. The driver-local day list
+    // parallelizes over defaultParallelism, which would append one
+    // tiny file PER CORE per load; coalesce(1) lands the audit batch
+    // as a single file (audit tables are day-count-sized at any scale).
+    // Appends to one directory share the committer's `_temporary` dir,
+    // which the first to commit deletes under the others.
+    import spark.implicits._
+    AuditLock.synchronized {
+      days.toDF("period")
+        .coalesce(1)
+        .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
+          lit("overwrite").as("operation"), col("period"), lit("graft").as("user"))
+        .write.mode(SaveMode.Append).parquet(auditDir)
+    }
 
-      // K6 — one audit row per loaded day. The driver-local day list
-      // parallelizes over defaultParallelism, which would append one
-      // tiny file PER CORE per load; coalesce(1) lands the audit batch
-      // as a single file (audit tables are day-count-sized at any scale).
-      // Appends to one directory share the committer's `_temporary` dir,
-      // which the first to commit deletes under the others.
-      import spark.implicits._
-      AuditLock.synchronized {
-        days.toDF("period")
-          .coalesce(1)
-          .select(lit(runStamp).as("run_timestamp"), lit(table).as("table"),
-            lit("overwrite").as("operation"), col("period"), lit(user).as("user"))
-          .write.mode(SaveMode.Append).parquet(auditDir)
-      }
-
-      LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
-    } finally pinned.unpersist()
+    LoadReport(days, streaks, gaps = math.max(0, streaks.size - 1))
   }
 }

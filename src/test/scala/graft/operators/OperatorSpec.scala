@@ -1,6 +1,10 @@
 package graft.operators
 
+import java.time.LocalDate
+
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.SparkSuite
 
@@ -92,6 +96,27 @@ class OperatorSpec extends SparkSuite {
     val df = Seq(java.sql.Date.valueOf("2024-05-05")).toDF("d")
     val r = DateStreaks(df, "d").collect()
     assert(r.length === 1 && r(0).getInt(2) === 1)
+  }
+
+  test("G1 property: DateStreaks.local equals DateStreaks.apply on generated day sets") {
+    // unsorted day lists with gaps and repeats, plus one day and none
+    val dayOffsets = Gen.choose(0, 40).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(3 -> Gen.choose(0, 30), 1 -> Gen.choose(0, 400))))
+    val cases = Gen.listOfN(40, dayOffsets).apply(Gen.Parameters.default, Seed(42L)).get ++
+      Seq(List(0), Nil)
+    assert(cases.exists(c => c.distinct.size < c.size), "no case repeats a day")
+    // ONE DataFrame pass: case i's days sit at i*1000 + offset, so islands
+    // of different cases are always more than a day apart
+    val epoch = LocalDate.of(2000, 1, 1)
+    val all = cases.zipWithIndex.flatMap { case (c, i) => c.map(o => epoch.plusDays(i * 1000L + o)) }
+    val fromFrame = DateStreaks(all.map(java.sql.Date.valueOf).toDF("d"), "d").collect()
+      .map(r => (r.getDate(0).toLocalDate, r.getDate(1).toLocalDate))
+      .groupBy { case (a, _) => (a.toEpochDay - epoch.toEpochDay) / 1000 }
+    cases.zipWithIndex.foreach { case (c, i) =>
+      val days = c.map(o => epoch.plusDays(i * 1000L + o)).sorted
+      val expected = fromFrame.getOrElse(i.toLong, Array.empty[(LocalDate, LocalDate)]).sortBy(_._1.toEpochDay).toSeq
+      assert(DateStreaks.local(days) === expected, s"case $i: $c")
+    }
   }
 
   // --------------------------------------------------------------- Sketches

@@ -20,12 +20,14 @@ class PipelineSpec extends SparkSuite {
   import spark.implicits._
 
   /** Most Spark jobs `Main.run` may issue on `writeMultiReportInputs`.
-    * Measured: 48 or 49, because each load's day-streak query runs
-    * beside its write, and adaptive execution plans it in 3 or 4 jobs
-    * depending on which of the two builds the load's cached input first.
-    * It was 69 when every sink re-ran the readers and the window.
+    * Measured: 39 in every run, since each load's write is its only
+    * action on its input. It was 48 or 49 while each load also ran a
+    * day-streak query beside its write (adaptive execution planned that
+    * in 3 or 4 jobs, depending on which of the two built the load's
+    * cached input first), and 69 when every sink re-ran the readers and
+    * the window.
     */
-  private val MainRunJobs = 50
+  private val MainRunJobs = 39
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(name)
@@ -237,40 +239,6 @@ class PipelineSpec extends SparkSuite {
     assert(res.errors.map(_.path) === Seq(s"$in/bad.csv"))
     assert(res.errors.head.message.contains("empty batch"))
     assert(res.results.find(_.report == ReportType.Occupancy).get.kept.count() === 1)
-  }
-
-  test("P3 batched guard: same isolation, one guard job instead of one per input") {
-    def writeInputs(): String = {
-      val in = tmpDir("graft-p3b-in")
-      Files.writeString(Paths.get(s"$in/bad.csv"), occCsv(Seq(
-        occRow("", "AB", "T1", "C1", "5", "q")), junkRows = 0))
-      Files.writeString(Paths.get(s"$in/g1.csv"), occCsv(Seq(
-        occRow("2024-01-01 00:00:00", "EF", "T3", "C3", "7", "q")), junkRows = 0))
-      Files.writeString(Paths.get(s"$in/g2.csv"), occCsv(Seq(
-        occRow("2024-01-02 00:00:00", "GH", "T4", "C4", "8", "q")), junkRows = 0))
-      in
-    }
-    def countJobs(body: => Unit): Int = SparkCounts.of(spark)(body)._2.jobs
-
-    val inA = writeInputs()
-    var resBatched: Pipeline.RunResult = null
-    val jobsBatched = countJobs {
-      resBatched = Pipeline.run(spark, inA, tmpDir("graft-p3b-o1"), "20240101T000000",
-        spark.emptyDataFrame, spark.emptyDataFrame, batchedGuard = true)
-    }
-    // identical isolation semantics to the eager guard
-    assert(resBatched.errors.map(_.path) === Seq(s"$inA/bad.csv"))
-    assert(resBatched.errors.head.message.contains("empty batch"))
-    assert(resBatched.results.find(_.report == ReportType.Occupancy).get.kept.count() === 2)
-
-    val inB = writeInputs()
-    val jobsEager = countJobs {
-      Pipeline.run(spark, inB, tmpDir("graft-p3b-o2"), "20240101T000000",
-        spark.emptyDataFrame, spark.emptyDataFrame, batchedGuard = false)
-    }
-    // 3 inputs: eager pays 3 isEmpty jobs, batched pays 1 count job
-    assert(jobsBatched < jobsEager,
-      s"batched guard should run fewer jobs (batched=$jobsBatched, eager=$jobsEager)")
   }
 
   /** Minimal one-sheet all-string workbook (rels-less fallback path). */
@@ -639,11 +607,11 @@ class PipelineSpec extends SparkSuite {
     } finally spark.conf.set(key, prev)
   }
 
-  test("K4-K6: a failed write stops the day-streak job before the load returns") {
+  test("K4-K6: a failed write leaves no running job, no pin and no audit row") {
     startFromEmptyCache()
     val dir = tmpDir("graft-sink-fail")
     Files.writeString(Paths.get(s"$dir/t"), "not a table")
-    // slow rows keep the streak job running while the write fails
+    // slow rows keep the input's tasks running while the write fails
     val slow = udf((i: Long) => { Thread.sleep(250); i.toInt })
     val df = spark.range(0, 8, 1, 2)
       .select(date_add(lit("2024-01-01").cast("date"), slow(col("id"))).cast("string").as("day"), col("id").as("v"))
@@ -658,14 +626,24 @@ class PipelineSpec extends SparkSuite {
   test("K6: concurrent loads into one audit directory keep every audit row") {
     val dir = tmpDir("graft-sink-conc")
     val tables = (0 until 8).map(i => s"t$i")
-    val reports = graft.control.DriverPool.traverse("audit-law", tables, parallelism = 8) { t =>
-      val days = Seq.tabulate(5)(d => f"2024-01-${d + 1}%02d")
-      PartitionOverwriteSink.load(spark, days.map(d => (d, t)).toDF("day", "v"),
+    // each table loads its own days (t<i>: i+1 days from 2024-01-<i*3+1>,
+    // skipping the second), so a load that reported another load's
+    // observed days would not match its own input
+    def daysOf(i: Int): Seq[String] =
+      (0 to i + 1).filter(_ != 1).map(d => java.time.LocalDate.of(2024, 1, 1).plusDays(i * 3 + d).toString)
+    val reports = graft.control.DriverPool.traverse("audit-law", tables.indices, parallelism = 8) { i =>
+      val t = tables(i)
+      PartitionOverwriteSink.load(spark, daysOf(i).map(d => (d, t)).toDF("day", "v"),
         "day", s"$dir/$t", s"$dir/audit", t, "run1")
     }
+    tables.indices.foreach(i => assert(reports(i).days === daysOf(i), tables(i)))
     val audit = spark.read.parquet(s"$dir/audit")
     assert(audit.count() === reports.map(_.days.size).sum)
     assert(audit.select("table").distinct().as[String].collect().sorted.toSeq === tables)
+    tables.indices.foreach { i =>
+      val periods = audit.filter(col("table") === tables(i)).select("period").as[String].collect().sorted.toSeq
+      assert(periods === daysOf(i), tables(i))
+    }
   }
 
   test("sharded export: one sorted file per shard, membership portable, rewrite byte-identical") {
