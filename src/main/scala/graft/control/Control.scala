@@ -14,8 +14,7 @@ import scala.collection.mutable.ListBuffer
 /** F13 — one run timestamp threaded through every artifact name
   * (reference `current_time`, `reports_exporter_v0.83.py:161`).
   */
-final case class RunContext(runStamp: String, exportDir: String, archiveDir: String,
-    user: String = "graft")
+final case class RunContext(runStamp: String, exportDir: String, archiveDir: String)
 object RunContext {
   private val fmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss")
   def now(exportDir: String, archiveDir: String): RunContext =

@@ -24,9 +24,11 @@ import org.apache.spark.sql.SparkSession
   *    start, the others' Spark jobs are cancelled by the tag, in-flight
   *    calls are waited for without an interrupt (a file swap completes),
   *    and the original exception is rethrown with later ones suppressed.
-  *  - Past `timeout`, the tag's jobs are cancelled, the threads are
-  *    interrupted and given a short grace, and `TimeoutException` is
-  *    thrown. Daemon threads cannot block JVM exit even if a call hangs.
+  *  - Past `timeout`, queued calls never start and the tag's jobs are
+  *    cancelled; calls blocked on them end with them. What still runs
+  *    after a short grace is interrupted and given one more, and
+  *    `TimeoutException` is thrown. Daemon threads cannot block JVM exit
+  *    even if a call hangs.
   */
 object DriverPool {
   private val GraceMs = 5000L
@@ -69,7 +71,16 @@ object DriverPool {
         }
       } catch {
         case e: Throwable =>
+          // fail like a failing call, so queued calls never start. A call
+          // blocked on a cancelled job returns only once the scheduler has
+          // failed the job, so it is not interrupted out of the wait; the
+          // re-cancel catches a job submitted after the first cancel.
+          failures.add(e)
           cancelJobs()
+          val graceEnd = System.nanoTime() + GraceMs * 1000L * 1000
+          while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS) &&
+              System.nanoTime() < graceEnd) cancelJobs()
+          // what still runs is outside a Spark job: interrupt it
           pool.shutdownNow()
           pool.awaitTermination(GraceMs, TimeUnit.MILLISECONDS)
           throw e

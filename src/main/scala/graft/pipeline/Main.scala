@@ -27,10 +27,10 @@ object Main {
     * (`reports_exporter_v0.83.py:1421-1434`); the file-sink analog derives
     * the day from the minute-text timestamp and partition-overwrites it.
     */
-  private def loadDateColumn(report: ReportType): Option[String] = report match {
-    case ReportType.TrainList      => Some("departure_date_short")
-    case ReportType.Occupancy      => Some("date")
-    case ReportType.BookingPayment => Some("op_day")
+  private def loadDateColumn(report: ReportType): String = report match {
+    case ReportType.TrainList      => "departure_date_short"
+    case ReportType.Occupancy      => "date"
+    case ReportType.BookingPayment => "op_day"
   }
 
   private def withLoadColumns(report: ReportType, df: DataFrame): DataFrame = report match {
@@ -64,17 +64,15 @@ object Main {
     val loadErrors = TrieMap.empty[ReportType, String]
     def load(r: Pipeline.ReportResult): Unit = {
       val name = r.report.schema.name
-      loadDateColumn(r.report).foreach { dateCol =>
-        try {
-          val report = PartitionOverwriteSink.load(spark,
-            withLoadColumns(r.report, r.kept), dateCol,
-            s"$targetDir/${name.replace(' ', '_').toLowerCase}",
-            s"$targetDir/audit", name, ctx.runStamp)
-          if (report.gaps > 0)
-            loadErrors.put(r.report, s"$name: ${report.gaps} gap(s) between date streaks")
-        } catch {
-          case e: Exception => loadErrors.put(r.report, s"$name: ${e.getMessage}")
-        }
+      try {
+        val report = PartitionOverwriteSink.load(spark,
+          withLoadColumns(r.report, r.kept), loadDateColumn(r.report),
+          s"$targetDir/${name.replace(' ', '_').toLowerCase}",
+          s"$targetDir/audit", name, ctx.runStamp)
+        if (report.gaps > 0)
+          loadErrors.put(r.report, s"$name: ${report.gaps} gap(s) between date streaks")
+      } catch {
+        case e: Exception => loadErrors.put(r.report, s"$name: ${e.getMessage}")
       }
     }
 

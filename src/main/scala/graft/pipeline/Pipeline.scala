@@ -14,6 +14,7 @@ import graft.operators.{Consolidate, KeepLastDedup}
 import graft.readers.{BookingPaymentReader, OccupancyReader, ReaderOutput, TrainListReader}
 import graft.schema.ReportType
 import graft.sinks.SideChannelCsv
+import graft.sources.Xlsx
 
 /** C2/C3/C4 + §3.1 — the end-to-end batch pipeline: discover input files,
   * classify each (S3/S4), dispatch to the per-type reader with per-input
@@ -44,10 +45,7 @@ object Pipeline {
       rejects: DataFrame,
       missingTrainNumbers: Option[DataFrame])
   final case class RunResult(results: Seq[ReportResult], errors: Seq[InputError],
-      unclassified: Seq[String]) {
-    /** C4 — any accumulated error flips the run to failed. */
-    def errorsFound: Boolean = errors.nonEmpty
-  }
+      unclassified: Seq[String])
 
   /** One classified input unit: a CSV file, or one sheet of an xlsx
     * workbook (S2 — sheet enumeration makes (file, sheet) the unit).
@@ -67,9 +65,9 @@ object Pipeline {
   }
 
   /** Driver-pool width for the classify, report and read fan-outs: the
-    * per-(file, sheet) sniffs and xlsx parses are independent, driver-side,
-    * and each a mix of zip IO and StAX CPU — a bounded pool is the engine's
-    * answer to the reference's dormant tiered read
+    * per-file sniffs and per-(file, sheet) xlsx parses are independent,
+    * driver-side, and each a mix of zip IO and StAX CPU — a bounded pool
+    * is the engine's answer to the reference's dormant tiered read
     * (`Old/reports_exporter_v0.82.ipynb:484-560`). Capped: the driver is
     * shared with Spark's scheduler threads. Safe because each unit is
     * thread-compatible: each xlsx parse opens its own ZipFile, and job
@@ -84,90 +82,48 @@ object Pipeline {
   private[pipeline] def parMap[A, B](xs: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
     DriverPool.traverse("pipeline", xs, parallelism)(f)
 
-  private sealed trait SniffUnit
-  private final case class CsvFile(path: String) extends SniffUnit
-  private final case class XlsxSheet(path: String, sheet: Int) extends SniffUnit
-  /** A workbook whose sheet enumeration failed or returned none. */
-  private final case class DeadBook(path: String) extends SniffUnit
-
   /** S2-S4 — classify every input unit in a directory: CSV files whole,
     * xlsx workbooks per sheet. Returns (classified, unclassified-display).
     *
-    * Two pool phases: sheet enumeration per workbook, then every
-    * (file, sheet) sniff+classify and CSV sniff together — a batch of
-    * thousands of workbooks no longer serializes on the driver.
+    * One pool phase over files, the CSVs then the workbooks, each in path
+    * order; a workbook opens once for all its sheets ([[Xlsx.sniffSheets]]).
+    * A workbook that cannot be opened, or lists no sheets, is unclassified
+    * as `path`; a sheet that cannot be parsed or matches no header as
+    * `path#sheet<i>`.
     */
   def classifyAll(spark: SparkSession, inputDir: String,
       parallelism: Int = DriverPoolParallelism)
       : (Seq[ClassifiedInput], Seq[String]) = {
-    val books = DriverPool.traverse("sheets", discover(inputDir, ".xlsx"), parallelism) { p =>
-      p -> (try graft.sources.Xlsx.sheetNames(p).indices.toSeq
-            catch { case _: Exception => Seq.empty })
-    }
-    val units: Seq[SniffUnit] =
-      discover(inputDir, ".csv").map(CsvFile) ++
-        books.flatMap {
-          case (p, ss) if ss.isEmpty => Seq(DeadBook(p))
-          case (p, ss)               => ss.map(XlsxSheet(p, _))
+    val files = discover(inputDir, ".csv") ++ discover(inputDir, ".xlsx")
+    val all = DriverPool.traverse("classify", files, parallelism) { p =>
+      if (p.endsWith(".csv"))
+        Seq(HeaderSniffer.classifyCsv(spark, p)
+          .map { case (idx, rep) => ClassifiedInput(p, None, idx, rep) }.toRight(p))
+      else {
+        val sheets = try Xlsx.sniffSheets(p) catch { case _: Exception => Nil }
+        if (sheets.isEmpty) Seq(Left(p))
+        else sheets.zipWithIndex.map { case (rows, i) =>
+          rows.toOption.flatMap(HeaderSniffer.classify)
+            .map { case (idx, rep) => ClassifiedInput(p, Some(i), idx, rep) }
+            .toRight(s"$p#sheet$i")
         }
-    val all = DriverPool.traverse("classify", units, parallelism) {
-      case CsvFile(p) =>
-        HeaderSniffer.classifyCsv(spark, p) match {
-          case Some((idx, rep)) => Right(ClassifiedInput(p, None, idx, rep))
-          case None             => Left(p)
-        }
-      case XlsxSheet(p, i) =>
-        val rows = try graft.sources.Xlsx.readSheet(p, i, HeaderSniffer.SniffRows)
-          catch { case _: Exception => Seq.empty }
-        HeaderSniffer.classify(rows) match {
-          case Some((idx, rep)) => Right(ClassifiedInput(p, Some(i), idx, rep))
-          case None             => Left(s"$p#sheet$i")
-        }
-      case DeadBook(p) => Left(p)
-    }
+      }
+    }.flatten
     (all.collect { case Right(c) => c }, all.collect { case Left(p) => p })
-  }
-
-  /** Workbook size for the distributed-parse routing decision, resolved
-    * through the Hadoop FileSystem of the path's SCHEME — `java.io.File`
-    * answers 0 for any non-local path (HDFS/S3), which would silently
-    * route every big remote workbook back onto the driver pool, the
-    * exact failure mode the threshold exists to prevent. A vanished
-    * file answers 0 and falls through to the driver-pool reader, whose
-    * open error the C3 isolation already captures.
-    */
-  private[pipeline] def inputBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
-    catch { case _: java.io.IOException => 0L }
   }
 
   /** C2 — dispatch one classified input to its reader. Any throw is
     * captured (C3) and the input skipped.
-    *
-    * Big workbooks route to the DISTRIBUTED xlsx parse (S6): at or
-    * above `xlsxDistributedBytes` (default
-    * [[graft.sources.XlsxDistributed.SingleBookDistributedBytes]]) the
-    * sheet parses in an executor task instead of on the driver pool —
-    * identical frame either way (PipelineSpec pins it), so the
-    * threshold trades driver memory/CPU for a task dispatch, never
-    * semantics.
     */
   def readInput(spark: SparkSession, input: ClassifiedInput,
-      fileOrd: Int, trainHours: => DataFrame, history: => DataFrame,
-      xlsxDistributedBytes: Long =
-        graft.sources.XlsxDistributed.SingleBookDistributedBytes)
+      fileOrd: Int, trainHours: => DataFrame, history: => DataFrame)
       : Either[InputError, ReaderOutput] =
     try {
       val path = input.path
       val report = input.report
       val base = input.sheet match {
-        case Some(si) if inputBytes(spark, path) >= xlsxDistributedBytes =>
-          graft.sources.XlsxDistributed.readClassifiedSingle(spark, path, si,
-            input.headerIdx, report.schema)
-        case Some(si) => graft.sources.Xlsx.readClassified(spark, path, si,
-          input.headerIdx, report.schema)
-        case None => HeaderSniffer.readClassified(spark, path, input.headerIdx, report)
+        case Some(si) => Xlsx.readClassified(spark, path, si, input.headerIdx, report.schema)
+        case None     => HeaderSniffer.readClassified(spark, path, input.headerIdx, report)
       }
       val raw = base
         // D1 input-order tiebreaker (SURVEY §7.4 risk 1): file ordinal +

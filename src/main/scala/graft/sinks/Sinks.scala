@@ -12,97 +12,34 @@ import graft.operators.DateStreaks
   * Reference: `reports_exporter_v0.83.py:599-603, 1775-1787, 1789-1797` —
   * zipped CSV artifacts named "<Report> <channel> <run timestamp>".
   *
-  * Two container formats:
-  *  - [[Container.GzipDir]] (default, scale path): a directory of gzip
-  *    part files, written fully distributed — no driver-side buffering.
-  *  - [[Container.CsvZip]] (reference-faithful delivery): a literal
-  *    `<artifact>.csv.zip` holding one `<artifact>.csv` entry, exactly
-  *    what the reference's consumers unzip. Zip is a single-stream
-  *    container, so the rows are still WRITTEN distributed (plain-csv
-  *    part files) and only STREAMED into the zip on the driver with a
-  *    constant-memory copy — right for the side channels (rejects,
-  *    duplicates: a sliver of the corpus), wrong for main data at 100 TB.
+  * Each artifact is a directory of gzip part files, written fully
+  * distributed with no driver-side buffering: Spark's codecs have no zip
+  * container, and gzip is the recorded deviation (SURVEY.md K1). The
+  * dialect is RFC-4180, as the reference's pandas `to_csv` writes it:
+  * embedded quotes double. Spark's default escape is a backslash, which
+  * standard CSV consumers (Python's `csv`, pandas, Excel) misread.
   */
 object SideChannelCsv {
-
-  sealed trait Container
-  object Container {
-    case object GzipDir extends Container
-    case object CsvZip extends Container
-  }
 
   /** The reference's artifact naming: "<report> <channel> <runStamp>". */
   def artifactPath(exportDir: String, report: String, channel: String, runStamp: String): String =
     s"$exportDir/$report $channel $runStamp"
 
-  def write(df: DataFrame, path: String,
-      container: Container = Container.GzipDir): Unit = container match {
-    case Container.GzipDir =>
-      df.write.mode(SaveMode.Overwrite)
-        .option("header", "true")
-        .option("compression", "gzip")
-        .csv(path)
-    case Container.CsvZip =>
-      writeCsvZip(df, path)
-  }
+  def write(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("header", "true")
+      .option("escape", "\"")
+      .option("compression", "gzip")
+      .csv(path)
 
-  /** `<path>.csv.zip` with a single `<basename>.csv` entry: parts are
-    * written distributed (headerless), then streamed into the zip in
-    * part order behind one header line. The staging write pins the
-    * RFC-4180 dialect (escape = quote, so embedded quotes double) —
-    * Spark's default escape is backslash, which standard CSV consumers
-    * (pandas, Excel) misparse; the header uses the same quote doubling.
-    */
-  private def writeCsvZip(df: DataFrame, path: String): Unit = {
-    val staging = path + ".staging"
-    df.write.mode(SaveMode.Overwrite).option("header", "false")
-      .option("quote", "\"").option("escape", "\"").csv(staging)
-    // The repackaging reads the staging dir through the DRIVER's local
-    // filesystem — a cluster deploy with a non-local default FS must use
-    // the gzip-dir container instead. Fail loudly rather than shipping a
-    // header-only zip with the rows silently dropped.
-    val stagingDir = new java.io.File(staging)
-    require(stagingDir.isDirectory,
-      s"csv.zip staging dir $staging not visible on the driver's local " +
-        "filesystem — use Container.GzipDir on non-local deployments")
-    val parts = Option(stagingDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    // an empty frame legitimately writes zero part files, but the commit
-    // marker must exist — checking it costs no recompute (re-running the
-    // frame to ask isEmpty could disagree with what was written)
-    require(parts.nonEmpty || new java.io.File(stagingDir, "_SUCCESS").exists(),
-      s"no part files and no _SUCCESS marker under $staging")
-    val base = new java.io.File(path).getName
-    val zos = new java.util.zip.ZipOutputStream(new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(path + ".csv.zip")))
-    try {
-      zos.putNextEntry(new java.util.zip.ZipEntry(s"$base.csv"))
-      val header = df.columns.map(csvQuote).mkString(",") + "\n"
-      zos.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      parts.foreach(p => java.nio.file.Files.copy(p.toPath, zos))
-      zos.closeEntry()
-    } finally zos.close()
-    parts.foreach(_.delete())
-    Option(new java.io.File(staging).listFiles()).getOrElse(Array.empty).foreach(_.delete())
-    new java.io.File(staging).delete()
-  }
+  def writeErrors(df: DataFrame, exportDir: String, report: String, runStamp: String): Unit =
+    write(df, artifactPath(exportDir, report, "error rows", runStamp))
 
-  private def csvQuote(s: String): String =
-    if (s.contains(",") || s.contains("\"") || s.contains("\n"))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
+  def writeDuplicates(df: DataFrame, exportDir: String, report: String, runStamp: String): Unit =
+    write(df, artifactPath(exportDir, report, "duplicates", runStamp))
 
-  def writeErrors(df: DataFrame, exportDir: String, report: String, runStamp: String,
-      container: Container = Container.GzipDir): Unit =
-    write(df, artifactPath(exportDir, report, "error rows", runStamp), container)
-
-  def writeDuplicates(df: DataFrame, exportDir: String, report: String, runStamp: String,
-      container: Container = Container.GzipDir): Unit =
-    write(df, artifactPath(exportDir, report, "duplicates", runStamp), container)
-
-  def writeSnapshot(df: DataFrame, exportDir: String, report: String, runStamp: String,
-      container: Container = Container.GzipDir): Unit =
-    write(df, artifactPath(exportDir, report, "data exported", runStamp), container)
+  def writeSnapshot(df: DataFrame, exportDir: String, report: String, runStamp: String): Unit =
+    write(df, artifactPath(exportDir, report, "data exported", runStamp))
 }
 
 /** K4-K6 — idempotent partition-overwrite load protocol, file-backed.

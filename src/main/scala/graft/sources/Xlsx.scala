@@ -6,13 +6,17 @@ import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable.{ArrayBuffer, ListBuffer}
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
+import graft.classify.HeaderSniffer
 import graft.schema.ReportSchema
 
 /** Minimal `.xlsx` reader on JDK-only primitives (zip + StAX) — no
-  * external dependency, zero-egress-safe.
+  * external dependency, zero-egress-safe. The one module that knows the
+  * xlsx format and where a sheet parses.
   *
   * xlsx is a zip of XML parts: `xl/workbook.xml` lists sheets,
   * `xl/worksheets/sheetN.xml` holds cells, `xl/sharedStrings.xml` the
@@ -20,10 +24,13 @@ import graft.schema.ReportSchema
   * date-styled numeric cells and render them the way pandas
   * `read_excel(dtype=str)` does).
   *
-  * Deliberately driver-side: workbook sheets are small by construction
+  * Classification ([[sniffSheets]]) is driver-side and opens each
+  * workbook once: the reference lists a workbook's sheets once and sniffs
+  * at most 50 rows of each (`reports_exporter_v0.83.py:1687-1692`,
+  * `:429-455`). The body read ([[readClassified]]) parses on the driver
   * (the reference's own model is per-sheet driver read + union;
-  * `reports_exporter_v0.83.py:522-528`), and the sniff path reads at most
-  * 50 rows. Large distributed inputs use the CSV/parquet paths.
+  * `:522-528`) unless the workbook is big enough to pressure the driver
+  * heap, which sends it to an executor task.
   *
   * Supported cell types: shared string (`t="s"`), inline string
   * (`t="inlineStr"`), literal (`t="str"`), boolean, and numeric —
@@ -42,19 +49,131 @@ object Xlsx {
     f
   }
 
-  final case class SheetRef(name: String, part: String)
-
   /** Elapsed-time tokens in a number format: [h]/[mm]/[ss] etc. */
   private[sources] val ElapsedToken = "(?i)\\[[hms]+\\]".r
 
-  /** Sheets in workbook order, resolved to their zip parts through
+  /** What every sheet of a workbook parses against: the shared-string
+    * pool, the date-styled style indexes and the date system.
+    */
+  private final case class Book(shared: IndexedSeq[String], dateStyles: Set[Int],
+      date1904: Boolean)
+
+  private def bookOf(zip: ZipFile): Book =
+    Book(readSharedStrings(zip), readDateStyles(zip), readDate1904(zip))
+
+  /** S2+S3 — the first [[HeaderSniffer.SniffRows]] rows of every sheet, in
+    * workbook order, from ONE open of the workbook: its rels,
+    * `workbook.xml`, shared strings, styles and date system parse once
+    * for all sheets. Throws when the workbook cannot be opened or its
+    * sheets cannot be listed; a sheet that cannot be parsed (a missing or
+    * malformed part, bad shared strings or styles) is a `Failure` in its
+    * own slot.
+    */
+  def sniffSheets(path: String): Seq[Try[Seq[Seq[String]]]] = withZip(path) { zip =>
+    val parts = sheetPartsOf(zip)
+    val book = Try(bookOf(zip))
+    parts.map(part =>
+      book.flatMap(b => Try(sheetRows(zip, part, b, HeaderSniffer.SniffRows, path))))
+  }
+
+  /** Read one sheet (by workbook order index) as all-string rows (empty
+    * cells are null).
+    */
+  def readSheet(path: String, sheetIndex: Int): Seq[Seq[String]] =
+    withZip(path) { zip => readSheetOf(zip, sheetIndex, path) }
+
+  /** All-string DataFrame of the sheet body below `headerIdx`, with the
+    * report's schema (the xlsx analog of HeaderSniffer.readClassified).
+    *
+    * The venue follows the workbook's size: at or above
+    * [[ExecutorParseBytes]] the sheet parses in an executor task, below
+    * it on the driver. Both give the same frame (XlsxSpec pins it), so
+    * the choice trades driver heap for a task dispatch, never semantics.
+    */
+  def readClassified(spark: SparkSession, path: String, sheetIndex: Int,
+      headerIdx: Int, schema: ReportSchema): DataFrame =
+    if (parsesOnExecutor(fileBytes(spark, path)))
+      readOnExecutor(spark, path, sheetIndex, headerIdx, schema)
+    else readOnDriver(spark, path, sheetIndex, headerIdx, schema)
+
+  /** Routing threshold of [[readClassified]]. 32 MB: well past the
+    * reference's own report sizes (the driver parse stays the low-latency
+    * default there), but under it long before a workbook's unzipped XML
+    * (~10× the zip) plus its shared-string pool could pressure driver
+    * memory when a pool of 16 parses runs concurrently.
+    */
+  private val ExecutorParseBytes: Long = 32L * 1024 * 1024
+
+  private[graft] def parsesOnExecutor(workbookBytes: Long): Boolean =
+    workbookBytes >= ExecutorParseBytes
+
+  /** Workbook size, resolved through the Hadoop FileSystem of the path's
+    * SCHEME — `java.io.File` answers 0 for any non-local path (HDFS/S3),
+    * which would silently route every big remote workbook back onto the
+    * driver, the exact failure mode the threshold exists to prevent. A
+    * vanished file answers 0 and falls through to the driver parse, whose
+    * open error the caller's per-input isolation captures.
+    */
+  private def fileBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
+    catch { case _: java.io.IOException => 0L }
+  }
+
+  private[graft] def readOnDriver(spark: SparkSession, path: String, sheetIndex: Int,
+      headerIdx: Int, schema: ReportSchema): DataFrame = {
+    val struct = schema.allStringStruct
+    val body = bodyRows(readSheet(path, sheetIndex), headerIdx, struct.size).map(Row.fromSeq)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(body.toList), struct)
+  }
+
+  /** The executor venue: the workbook ships through a `binaryFile` scan
+    * and its one classified sheet parses in an executor task, so a big
+    * workbook costs the driver nothing but the listing. The bytes land in
+    * an executor-local temp file (the zip central directory needs random
+    * access, which `ZipInputStream` cannot give). One file → one task →
+    * one partition, which also preserves the parse-order row sequence the
+    * pipeline's `monotonically_increasing_id` tiebreaker relies on.
+    */
+  private[graft] def readOnExecutor(spark: SparkSession, path: String, sheetIndex: Int,
+      headerIdx: Int, schema: ReportSchema): DataFrame = {
+    import spark.implicits._
+    val struct = schema.allStringStruct
+    val width = struct.size
+    val rows = spark.read.format("binaryFile").load(path)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
+      .flatMap { case (p, bytes) =>
+        val tmp = java.nio.file.Files.createTempFile("graft-xlsx", ".zip")
+        val sheet =
+          try {
+            java.nio.file.Files.write(tmp, bytes)
+            withZip(tmp.toString)(readSheetOf(_, sheetIndex, p))
+          } finally java.nio.file.Files.deleteIfExists(tmp)
+        bodyRows(sheet, headerIdx, width)
+      }
+    spark.createDataFrame(rows.rdd.map(Row.fromSeq), struct)
+  }
+
+  /** The rows below the header, padded with nulls or cut to `width`. */
+  private def bodyRows(sheet: Seq[Seq[String]], headerIdx: Int,
+      width: Int): Seq[Seq[String]] =
+    sheet.drop(headerIdx + 1).map(r => (0 until width).map(i => if (i < r.length) r(i) else null))
+
+  // ------------------------------------------------------------- internals
+
+  private def withZip[A](path: String)(f: ZipFile => A): A = {
+    val zip = new ZipFile(path)
+    try f(zip) finally zip.close()
+  }
+
+  /** Sheet parts in workbook order, resolved through
     * `xl/_rels/workbook.xml.rels` (part numbering does NOT follow sheet
     * order once sheets have been deleted/reordered — the r:id
     * relationship is the only correct mapping).
     */
-  def sheetRefs(path: String): Seq[SheetRef] = withZip(path)(sheetRefsOf)
-
-  private def sheetRefsOf(zip: ZipFile): Seq[SheetRef] = {
+  private def sheetPartsOf(zip: ZipFile): Seq[String] = {
     val rels: Map[String, String] = {
       val e = zip.getEntry("xl/_rels/workbook.xml.rels")
       if (e == null) Map.empty
@@ -76,117 +195,33 @@ object Xlsx {
     val wb = zip.getInputStream(zip.getEntry("xl/workbook.xml"))
     try {
       val r = factory.createXMLStreamReader(wb)
-      val out = ListBuffer.empty[SheetRef]
+      val out = ListBuffer.empty[String]
       var ordinal = 0
       while (r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "sheet") {
           ordinal += 1
-          val name = attr(r, "name").getOrElse("")
-          val part = attr(r, "id").flatMap(rels.get)
+          out += attr(r, "id").flatMap(rels.get)
             .getOrElse(s"xl/worksheets/sheet$ordinal.xml") // rels-less fallback
-          out += SheetRef(name, part)
         }
       }
       out.toList
     } finally wb.close()
   }
 
-  /** Sheet names in workbook order (reference S2). */
-  def sheetNames(path: String): Seq[String] = sheetRefs(path).map(_.name)
+  private def readSheetOf(zip: ZipFile, sheetIndex: Int, label: String): Seq[Seq[String]] = {
+    val parts = sheetPartsOf(zip)
+    require(sheetIndex >= 0 && sheetIndex < parts.length,
+      s"sheet index $sheetIndex out of range (${parts.length} sheets) in $label")
+    sheetRows(zip, parts(sheetIndex), bookOf(zip), Int.MaxValue, label)
+  }
 
-  /** Read one sheet (by workbook order index) as all-string rows (empty
-    * cells are null), up to `maxRows` rows.
-    */
-  def readSheet(path: String, sheetIndex: Int, maxRows: Int = Int.MaxValue): Seq[Seq[String]] =
-    withZip(path) { zip => readSheetOf(zip, sheetIndex, maxRows, path) }
-
-  private def readSheetOf(zip: ZipFile, sheetIndex: Int, maxRows: Int,
+  private def sheetRows(zip: ZipFile, part: String, book: Book, maxRows: Int,
       label: String): Seq[Seq[String]] = {
-    val refs = sheetRefsOf(zip)
-    require(sheetIndex >= 0 && sheetIndex < refs.length,
-      s"sheet index $sheetIndex out of range (${refs.length} sheets) in $label")
-    val shared = readSharedStrings(zip)
-    val dateStyles = readDateStyles(zip)
-    val date1904 = readDate1904(zip)
-    val entry = Option(zip.getEntry(refs(sheetIndex).part))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no sheet part ${refs(sheetIndex).part} in $label"))
+    val entry = Option(zip.getEntry(part))
+      .getOrElse(throw new IllegalArgumentException(s"no sheet part $part in $label"))
     val in = zip.getInputStream(entry)
-    try parseSheet(in, shared, dateStyles, date1904, maxRows)
+    try parseSheet(in, book, maxRows)
     finally in.close()
-  }
-
-  /** Parse a whole workbook from its raw bytes — the executor-side entry
-    * point of the distributed read ([[XlsxDistributed]]): bytes arrive
-    * from a `binaryFile` scan, land in an executor-local temp file (the
-    * zip central directory needs random access, which `ZipInputStream`
-    * cannot give), and every sheet parses through the same StAX path as
-    * the driver-side read. Workbook-sized memory by design — the xlsx
-    * format itself is workbook-sized (shared-string pool).
-    *
-    * @return one entry per sheet in workbook order:
-    *   (sheet name, sheet index, all-string rows)
-    */
-  private[sources] def parseWorkbookBytes(label: String, bytes: Array[Byte],
-      maxRows: Int = Int.MaxValue): Seq[(String, Int, Seq[Seq[String]])] = {
-    val tmp = java.nio.file.Files.createTempFile("graft-xlsx", ".zip")
-    try {
-      java.nio.file.Files.write(tmp, bytes)
-      withZip(tmp.toString) { zip =>
-        val refs = sheetRefsOf(zip)
-        val shared = readSharedStrings(zip)
-        val dateStyles = readDateStyles(zip)
-        val date1904 = readDate1904(zip)
-        refs.zipWithIndex.map { case (ref, i) =>
-          Option(zip.getEntry(ref.part)) match {
-            case None => (ref.name, i, Seq.empty[Seq[String]])
-            case Some(entry) =>
-              val in = zip.getInputStream(entry)
-              try (ref.name, i, parseSheet(in, shared, dateStyles, date1904, maxRows))
-              finally in.close()
-          }
-        }
-      }
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** One sheet from raw workbook bytes — the executor-side form of
-    * [[readSheet]] ([[XlsxDistributed.readClassifiedSingle]]): bytes
-    * land in an executor-local temp file (the zip central directory
-    * needs random access) and ONLY the requested sheet parses — the
-    * other sheets' XML is never touched, unlike the whole-workbook
-    * [[parseWorkbookBytes]].
-    */
-  private[sources] def readSheetBytes(label: String, bytes: Array[Byte],
-      sheetIndex: Int): Seq[Seq[String]] = {
-    val tmp = java.nio.file.Files.createTempFile("graft-xlsx", ".zip")
-    try {
-      java.nio.file.Files.write(tmp, bytes)
-      withZip(tmp.toString) { zip =>
-        readSheetOf(zip, sheetIndex, Int.MaxValue, label)
-      }
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** All-string DataFrame of the sheet body below `headerIdx`, with the
-    * report's schema (the xlsx analog of HeaderSniffer.readClassified).
-    */
-  def readClassified(spark: SparkSession, path: String, sheetIndex: Int,
-      headerIdx: Int, schema: ReportSchema): DataFrame = {
-    val struct = schema.allStringStruct
-    val width = struct.size
-    val body = readSheet(path, sheetIndex).drop(headerIdx + 1).map { r =>
-      Row.fromSeq((0 until width).map(i => if (i < r.length) r(i) else null))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(body.toList), struct)
-  }
-
-  // ------------------------------------------------------------- internals
-
-  private def withZip[A](path: String)(f: ZipFile => A): A = {
-    val zip = new ZipFile(path)
-    try f(zip) finally zip.close()
   }
 
   private def attr(r: XMLStreamReader, name: String): Option[String] = {
@@ -282,8 +317,7 @@ object Xlsx {
     } finally in.close()
   }
 
-  private def parseSheet(in: InputStream, shared: IndexedSeq[String],
-      dateStyles: Set[Int], date1904: Boolean, maxRows: Int): Seq[Seq[String]] = {
+  private def parseSheet(in: InputStream, book: Book, maxRows: Int): Seq[Seq[String]] = {
     val r = factory.createXMLStreamReader(in)
     val rows = ListBuffer.empty[Seq[String]]
     var row: ArrayBuffer[String] = null
@@ -314,12 +348,12 @@ object Xlsx {
         case "c" if row != null =>
           val raw = sb.toString
           val value: String = cellType match {
-            case "s" => raw.toIntOption.flatMap(shared.lift).orNull
+            case "s" => raw.toIntOption.flatMap(book.shared.lift).orNull
             case "inlineStr" | "str" => raw
             case "b" => if (raw == "1") "TRUE" else "FALSE"
             case _ => // numeric
               if (raw.isEmpty) null
-              else if (dateStyles(cellStyle)) renderDateSerial(raw, date1904)
+              else if (book.dateStyles(cellStyle)) renderDateSerial(raw, book.date1904)
               else raw
           }
           while (row.length < cellCol) row += null

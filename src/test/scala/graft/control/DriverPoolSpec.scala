@@ -101,6 +101,23 @@ class DriverPoolSpec extends SparkSuite {
     assert(poolThreads("timeout").isEmpty, poolThreads("timeout").map(_.getName))
   }
 
+  test("(c) past the timeout, a job a call submits late is cancelled too, and the call ends with it") {
+    assertNoActiveJob()
+    intercept[TimeoutException] {
+      DriverPool.traverse("late", 0 until 2, parallelism = 2, timeout = 1.second) { i =>
+        if (i == 0) {
+          // slow planning that swallows interrupts, then a job
+          val end = System.nanoTime() + 2L * 1000 * 1000 * 1000
+          while (System.nanoTime() < end)
+            try Thread.sleep(20) catch { case _: InterruptedException => () }
+          longJob()
+        }
+      }
+    }
+    assertNoActiveJob()
+    assert(poolThreads("late").isEmpty, poolThreads("late").map(_.getName))
+  }
+
   test("(d) jobs from a call keep the caller's job group and carry the label") {
     val sc = spark.sparkContext
     val props = new ConcurrentLinkedQueue[Properties]

@@ -241,15 +241,18 @@ class PipelineSpec extends SparkSuite {
     assert(res.results.find(_.report == ReportType.Occupancy).get.kept.count() === 1)
   }
 
-  /** Minimal one-sheet all-string workbook (rels-less fallback path). */
-  private def writeStrXlsx(path: String, rows: Seq[Seq[String]]): Unit = {
+  /** Minimal all-string workbook (rels-less fallback path): its
+    * `workbook.xml` lists `listed` sheets, and only the first has a part.
+    */
+  private def writeStrXlsx(path: String, rows: Seq[Seq[String]], listed: Int = 1): Unit = {
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(path))
     def put(name: String, content: String): Unit = {
       zos.putNextEntry(new java.util.zip.ZipEntry(name))
       zos.write(content.getBytes("UTF-8")); zos.closeEntry()
     }
+    val sheets = (1 to listed).map(i => s"""<sheet name="Report$i" sheetId="$i"/>""").mkString
     put("xl/workbook.xml",
-      """<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheets><sheet name="Report" sheetId="1"/></sheets></workbook>""")
+      s"""<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheets>$sheets</sheets></workbook>""")
     val body = rows.zipWithIndex.map { case (cells, ri) =>
       val cs = cells.zipWithIndex.map { case (v, ci) =>
         s"""<c r="${('A' + ci).toChar}${ri + 1}" t="str"><v>${scala.xml.Utility.escape(v)}</v></c>"""
@@ -298,6 +301,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("S6 routing: a workbook over the byte threshold reads via the executor-side parse, frame-identical to the driver path") {
+    import graft.sources.Xlsx
     val in = tmpDir("graft-dist-route")
     val occCells = (d: String, od: String) => (0 until 24).map(i =>
       Map(0 -> d, 1 -> od, 5 -> "T1", 6 -> "C1", 14 -> "5", 8 -> "q")
@@ -311,28 +315,47 @@ class PipelineSpec extends SparkSuite {
     assert(classified.size === 1 && un.isEmpty)
     val ci = classified.head
 
-    // the two execution venues must produce the IDENTICAL frame
-    val driverSide = graft.sources.Xlsx.readClassified(spark, ci.path,
-      ci.sheet.get, ci.headerIdx, ci.report.schema)
-    val executorSide = graft.sources.XlsxDistributed.readClassifiedSingle(
-      spark, ci.path, ci.sheet.get, ci.headerIdx, ci.report.schema)
-    assert(executorSide.schema === driverSide.schema)
-    assert(executorSide.collect().toSeq.sortBy(_.toString)
-      === driverSide.collect().toSeq.sortBy(_.toString))
+    // 32 MB and over parses on an executor, anything smaller on the driver
+    val threshold = 32L * 1024 * 1024
+    assert(!Xlsx.parsesOnExecutor(threshold - 1))
+    assert(Xlsx.parsesOnExecutor(threshold))
 
-    // end-to-end through readInput: threshold 0 forces the distributed
-    // route; the reader output (minus the venue-dependent physical
-    // tiebreaker ids) matches the default driver route
-    def goodRows(threshold: Long) =
-      Pipeline.readInput(spark, ci, 0, spark.emptyDataFrame,
-          spark.emptyDataFrame, xlsxDistributedBytes = threshold)
-        .toOption.get.good.drop("__file_ord", "__row_ord")
-    val viaDriver = goodRows(Long.MaxValue)
-    val viaExecutor = goodRows(0L)
+    // the two execution venues must produce the IDENTICAL frame
+    val driverSide = Xlsx.readOnDriver(spark, ci.path, ci.sheet.get, ci.headerIdx, ci.report.schema)
+    val executorSide = Xlsx.readOnExecutor(spark, ci.path, ci.sheet.get, ci.headerIdx,
+      ci.report.schema)
+    assert(executorSide.schema === driverSide.schema)
+    assert(executorSide.collect().toSeq === driverSide.collect().toSeq)
+
+    // end to end: readInput's output (this small workbook routes to the
+    // driver) equals the reader's output over the executor-side frame,
+    // minus the venue-dependent physical tiebreaker ids
+    val viaDriver = Pipeline.readInput(spark, ci, 0, spark.emptyDataFrame,
+        spark.emptyDataFrame).toOption.get.good.drop("__file_ord", "__row_ord")
+    val viaExecutor = OccupancyReader(executorSide
+        .withColumn("__file_ord", lit(0))
+        .withColumn("__row_ord", monotonically_increasing_id()))
+      .good.drop("__file_ord", "__row_ord")
     assert(viaExecutor.columns.toSeq === viaDriver.columns.toSeq)
     assert(viaExecutor.collect().toSeq.sortBy(_.toString)
       === viaDriver.collect().toSeq.sortBy(_.toString))
     assert(viaExecutor.count() === 3L)
+  }
+
+  test("classifyAll: an unopenable workbook is unclassified whole, a missing sheet part by sheet, in input order") {
+    val in = tmpDir("graft-cls-books")
+    Files.writeString(Paths.get(s"$in/occ.csv"),
+      occCsv(Seq(occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q")), junkRows = 0))
+    Files.writeString(Paths.get(s"$in/bad.xlsx"), "not a zip")
+    val occCells = (0 until 24).map(i => Map(0 -> "2024-01-01 00:00:00", 1 -> "AB",
+      5 -> "T1", 6 -> "C1", 14 -> "5", 8 -> "q").getOrElse(i, "1"))
+    writeStrXlsx(s"$in/book.xlsx", Seq(Seq("junk above"), Schemas.occupancy.header, occCells),
+      listed = 2)
+    val (classified, unclassified) = Pipeline.classifyAll(spark, in)
+    assert(classified === Seq(
+      Pipeline.ClassifiedInput(s"$in/occ.csv", None, 0, ReportType.Occupancy),
+      Pipeline.ClassifiedInput(s"$in/book.xlsx", Some(0), 1, ReportType.Occupancy)))
+    assert(unclassified === Seq(s"$in/bad.xlsx", s"$in/book.xlsx#sheet1"))
   }
 
   test("J1: a dimension key with a NULL probe value counts as missing (reference null-check parity)") {
@@ -554,26 +577,21 @@ class PipelineSpec extends SparkSuite {
     }
   }
 
-  test("K1-K3 zip container: literal .csv.zip with one csv entry, content intact") {
-    import scala.jdk.CollectionConverters._
+  test("K1-K3: side channels write RFC-4180 CSV: embedded quotes double, never backslash-escaped") {
     import graft.sinks.SideChannelCsv
-    val dir = tmpDir("graft-zip")
-    val df = Seq(("a", "x,y"), ("b", "plain"), ("c", "say \"hi\""))
-      .toDF("k", "v").repartition(2)
-    SideChannelCsv.write(df, s"$dir/Occupancy duplicates 20240101",
-      SideChannelCsv.Container.CsvZip)
-    val zf = new java.util.zip.ZipFile(s"$dir/Occupancy duplicates 20240101.csv.zip")
-    try {
-      val entries = zf.entries().asScala.toSeq
-      assert(entries.map(_.getName) === Seq("Occupancy duplicates 20240101.csv"))
-      val lines = scala.io.Source.fromInputStream(zf.getInputStream(entries.head))
-        .getLines().toSeq
-      assert(lines.head === "k,v")
-      // embedded quotes double (RFC 4180), never backslash-escape (ADVICE r3)
-      assert(lines.tail.sorted === Seq("a,\"x,y\"", "b,plain", "c,\"say \"\"hi\"\"\""))
-    } finally zf.close()
-    // staging directory cleaned up
-    assert(!Files.exists(Paths.get(s"$dir/Occupancy duplicates 20240101.staging")))
+    val dir = tmpDir("graft-side")
+    val df = Seq(("a", "x,y"), ("b", "plain"), ("c", "say \"hi\"")).toDF("k", "v").repartition(2)
+    SideChannelCsv.writeDuplicates(df, dir, "Occupancy", "20240101")
+    val parts = new java.io.File(SideChannelCsv.artifactPath(dir, "Occupancy", "duplicates", "20240101"))
+      .listFiles().filter(_.getName.endsWith(".csv.gz")).toSeq
+    assert(parts.nonEmpty)
+    val lines = parts.flatMap { f =>
+      val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+    }
+    // every part carries the header; the records read back as RFC-4180
+    assert(lines.filter(_ == "k,v").size === parts.size)
+    assert(lines.filterNot(_ == "k,v").sorted === Seq("a,\"x,y\"", "b,plain", "c,\"say \"\"hi\"\"\""))
   }
 
   test("K4-K6: partition-overwrite load is idempotent and audits per day") {

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSuite
+import graft.classify.HeaderSniffer
 import graft.pipeline.Pipeline
 import graft.schema.{ReportType, Schemas}
 
@@ -14,11 +15,13 @@ import graft.schema.{ReportType, Schemas}
 class XlsxSpec extends SparkSuite {
   import spark.implicits._
 
-  /** One-sheet workbook: shared strings, inline strings, numerics, and a
-    * date-styled numeric cell.
+  /** Workbook of shared strings, inline strings, numerics, and
+    * date-styled numeric cells: one sheet of `sheetRows`, then one more
+    * sheet per entry of `moreSheets` (rels-less, parts in sheet order).
     */
   private def writeXlsx(path: String, sheetRows: Seq[Seq[(String, String)]],
-      sharedStrings: Seq[String], date1904: Boolean = false): Unit = {
+      sharedStrings: Seq[String], date1904: Boolean = false,
+      moreSheets: Seq[Seq[Seq[(String, String)]]] = Nil): Unit = {
     val zos = new ZipOutputStream(new FileOutputStream(path))
     def put(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name))
@@ -27,10 +30,13 @@ class XlsxSpec extends SparkSuite {
     }
     put("[Content_Types].xml",
       """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""")
+    val sheets = sheetRows +: moreSheets
     val wbPr = if (date1904) """<workbookPr date1904="1"/>""" else ""
+    val sheetList = sheets.indices.map(i =>
+      s"""<sheet name="Report${i + 1}" sheetId="${i + 1}" r:id="rId${i + 1}" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"/>""").mkString
     put("xl/workbook.xml",
       s"""<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-        |$wbPr<sheets><sheet name="Report" sheetId="1" r:id="rId1" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"/></sheets>
+        |$wbPr<sheets>$sheetList</sheets>
         |</workbook>""".stripMargin)
     put("xl/sharedStrings.xml",
       s"""<?xml version="1.0"?><sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${sharedStrings.size}" uniqueCount="${sharedStrings.size}">""" +
@@ -45,23 +51,25 @@ class XlsxSpec extends SparkSuite {
         |<numFmts count="3"><numFmt numFmtId="164" formatCode="[h]:mm:ss"/><numFmt numFmtId="165" formatCode="yyyy-mm-dd"/><numFmt numFmtId="166" formatCode="[$-409]m/d/yy h:mm"/></numFmts>
         |<cellXfs count="5"><xf numFmtId="0"/><xf numFmtId="22"/><xf numFmtId="164"/><xf numFmtId="165"/><xf numFmtId="166"/></cellXfs>
         |</styleSheet>""".stripMargin)
-    val body = sheetRows.zipWithIndex.map { case (cells, ri) =>
-      val cs = cells.zipWithIndex.collect { case ((t, v), ci) if v != null =>
-        val ref = s"${('A' + ci).toChar}${ri + 1}"
-        t match {
-          case "s"   => s"""<c r="$ref" t="s"><v>$v</v></c>"""
-          case "str" => s"""<c r="$ref" t="str"><v>${scala.xml.Utility.escape(v)}</v></c>"""
-          case "d"   => s"""<c r="$ref" s="1"><v>$v</v></c>"""
-          case "el"  => s"""<c r="$ref" s="2"><v>$v</v></c>"""
-          case "cd"  => s"""<c r="$ref" s="3"><v>$v</v></c>"""
-          case "ld"  => s"""<c r="$ref" s="4"><v>$v</v></c>"""
-          case _     => s"""<c r="$ref"><v>$v</v></c>"""
-        }
+    sheets.zipWithIndex.foreach { case (rows, si) =>
+      val body = rows.zipWithIndex.map { case (cells, ri) =>
+        val cs = cells.zipWithIndex.collect { case ((t, v), ci) if v != null =>
+          val ref = s"${('A' + ci).toChar}${ri + 1}"
+          t match {
+            case "s"   => s"""<c r="$ref" t="s"><v>$v</v></c>"""
+            case "str" => s"""<c r="$ref" t="str"><v>${scala.xml.Utility.escape(v)}</v></c>"""
+            case "d"   => s"""<c r="$ref" s="1"><v>$v</v></c>"""
+            case "el"  => s"""<c r="$ref" s="2"><v>$v</v></c>"""
+            case "cd"  => s"""<c r="$ref" s="3"><v>$v</v></c>"""
+            case "ld"  => s"""<c r="$ref" s="4"><v>$v</v></c>"""
+            case _     => s"""<c r="$ref"><v>$v</v></c>"""
+          }
+        }.mkString
+        s"""<row r="${ri + 1}">$cs</row>"""
       }.mkString
-      s"""<row r="${ri + 1}">$cs</row>"""
-    }.mkString
-    put("xl/worksheets/sheet1.xml",
-      s"""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""")
+      put(s"xl/worksheets/sheet${si + 1}.xml",
+        s"""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""")
+    }
     zos.close()
   }
 
@@ -75,11 +83,11 @@ class XlsxSpec extends SparkSuite {
         Seq(("str", "hello"), ("d", "45292.5"), ("n", null), ("n", "42")),
         Seq(("n", "3.5"))),
       sharedStrings = Seq("colA", "colB"))
-    assert(Xlsx.sheetNames(path) === Seq("Report"))
     val rows = Xlsx.readSheet(path, 0)
     assert(rows(0) === Seq("colA", "colB"))
     assert(rows(1) === Seq("hello", "2024-01-01 12:00:00", null, "42"))
     assert(rows(2) === Seq("3.5"))
+    assert(Xlsx.sniffSheets(path).map(_.get) === Seq(rows))
   }
 
   test("xlsx: elapsed-time custom formats stay raw serials, custom date formats render") {
@@ -123,7 +131,7 @@ class XlsxSpec extends SparkSuite {
     put("xl/worksheets/sheet9.xml", sheetXml("from-late"))
     put("xl/worksheets/sheet2.xml", sheetXml("from-early"))
     zos.close()
-    assert(Xlsx.sheetNames(path) === Seq("Late", "Early"))
+    assert(Xlsx.sniffSheets(path).map(_.get) === Seq(Seq(Seq("from-late")), Seq(Seq("from-early"))))
     assert(Xlsx.readSheet(path, 0) === Seq(Seq("from-late")))
     assert(Xlsx.readSheet(path, 1) === Seq(Seq("from-early")))
   }
@@ -152,57 +160,35 @@ class XlsxSpec extends SparkSuite {
   }
 
   test("distributed xlsx: executor-side parse equals the driver-side reader per sheet") {
-    val dir = Files.createTempDirectory("graft-xlsx-dist").toString
-    writeXlsx(s"$dir/a.xlsx",
-      Seq(Seq(("s", "0"), ("n", "42")), Seq(("str", "x"), ("d", "45292.5"))),
-      sharedStrings = Seq("hello"))
-    writeXlsx(s"$dir/b.xlsx",
-      Seq(Seq(("str", "only"), (null, null), ("n", "7"))),
-      sharedStrings = Seq.empty)
-    val got = XlsxDistributed.readRaw(spark, s"$dir/*.xlsx")
-      .collect()
-      .map(r => (new java.io.File(new java.net.URI(r.path)).getName,
-        r.sheet, r.row_idx, r.cells.toList))
-      .toSet
-    val want = Seq("a.xlsx", "b.xlsx").flatMap { f =>
-      Xlsx.readSheet(s"$dir/$f", 0).zipWithIndex.map { case (cells, ri) =>
-        (f, "Report", ri.toLong, cells.toList)
-      }
-    }.toSet
-    assert(got === want)
-    assert(got.exists(_._4.contains("hello")), "shared strings resolve on executors")
-    assert(got.exists(_._4.exists(c => c != null && c.startsWith("2024-01-01"))),
-      "date-styled serials render on executors")
-  }
-
-  test("distributed xlsx: per-sheet classification gathers one report's bodies across the batch") {
-    val dir = Files.createTempDirectory("graft-xlsx-dist2").toString
-    val header = Schemas.occupancy.header
-    def dataRow(date: String, od: String): Seq[(String, String)] =
-      (0 until 24).map { i =>
-        val v = Map(0 -> date, 1 -> od, 5 -> "T1", 6 -> "C1", 14 -> "5", 8 -> "q")
-          .getOrElse(i, "1")
-        ("str", v)
-      }
-    // two classifiable workbooks (one with a junk preamble row) and one
-    // unclassifiable one that must contribute nothing
-    writeXlsx(s"$dir/r1.xlsx",
-      Seq(Seq(("str", "junk above")), header.map(h => ("str", h)),
-        dataRow("2024-01-01 00:00:00", "AB")),
-      sharedStrings = Seq.empty)
-    writeXlsx(s"$dir/r2.xlsx",
-      Seq(header.map(h => ("str", h)),
-        dataRow("2024-01-02 00:00:00", "CD"),
-        dataRow("2024-01-03 00:00:00", "EF")),
-      sharedStrings = Seq.empty)
-    writeXlsx(s"$dir/noise.xlsx",
-      Seq(Seq(("str", "not"), ("str", "a"), ("str", "report"))),
-      sharedStrings = Seq.empty)
-    val got = XlsxDistributed.readClassified(spark, s"$dir/*.xlsx",
-      ReportType.Occupancy)
-    assert(got.schema === Schemas.occupancy.allStringStruct)
-    assert(got.count() === 3)
-    val ods = got.select(got.columns(1)).as[String].collect().toSet
-    assert(ods === Set("AB", "CD", "EF"))
+    val dir = Files.createTempDirectory("graft-xlsx-venue").toString
+    val path = s"$dir/book.xlsx"
+    val header = Schemas.occupancy.header.map(h => ("str", h))
+    // cells in schema order: a shared string (od), a date-styled serial
+    // (Date, 45292.5 = 2024-01-01 12:00:00) and literal values
+    def dataRow(serial: String, od: String): Seq[(String, String)] =
+      (0 until 24).map(i => Map(0 -> ("d", serial), 1 -> ("s", od)).getOrElse(i, ("str", s"v$i")))
+    writeXlsx(path,
+      Seq(Seq(("str", "junk above")), header,
+        dataRow("45292.5", "0"), dataRow("45293.25", "1")),
+      sharedStrings = Seq("AB", "CD"),
+      // more body rows than the classification sniff reads
+      moreSheets = Seq(header +: (0 until 60).map(i => dataRow(s"${45300 + i}", "1"))))
+    val schema = Schemas.occupancy
+    val sniffed = Xlsx.sniffSheets(path).map(_.get)
+    assert(sniffed.map(_.size) === Seq(4, HeaderSniffer.SniffRows))
+    for ((sheet, headerIdx, bodyRows) <- Seq((0, 1, 2), (1, 0, 60))) {
+      assert(HeaderSniffer.classify(sniffed(sheet)) === Some((headerIdx, ReportType.Occupancy)))
+      val onDriver = Xlsx.readOnDriver(spark, path, sheet, headerIdx, schema)
+      val onExecutor = Xlsx.readOnExecutor(spark, path, sheet, headerIdx, schema)
+      assert(onExecutor.schema === onDriver.schema)
+      assert(onExecutor.rdd.getNumPartitions === 1, "one workbook, one task")
+      val rows = onDriver.collect().toSeq
+      assert(rows.size === bodyRows)
+      assert(onExecutor.collect().toSeq === rows)
+    }
+    val first = Xlsx.readOnExecutor(spark, path, 0, 1, schema).collect()
+    assert(first.map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq(("2024-01-01 12:00:00", "AB"), ("2024-01-02 06:00:00", "CD")),
+      "shared strings resolve and date-styled serials render on executors")
   }
 }
