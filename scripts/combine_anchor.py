@@ -4,7 +4,7 @@
 Usage: combine_anchor.py <label=ratio=path> <label=ratio=path> ...
                          [--metric NAME] [--note TEXT]
 
-Generalizes r19_combine.py to any number of legs and fixes its ADVICE
+Generalizes r19_combine.py (last at commit f0c8915) to any number of legs and fixes its ADVICE
 finding: flooring min-of-passes with the post-suite retime mixes two
 methodologies, so this combiner RECORDS per gate which source won and
 by how much (`retime_provenance_<label>`) — the combined table shows

@@ -6,7 +6,7 @@ Usage:
                 [--allow gate=reason ...]
   slope_gate.py --selftest
 
-Reads a combined multi-scale anchor (combine_anchor.py / r19_combine.py
+Reads a combined multi-scale anchor (combine_anchor.py
 format: `queries_<leg>` maps plus `slopes_*` maps) and exits NONZERO
 unless every invariant the anchor exists to prove actually holds:
 

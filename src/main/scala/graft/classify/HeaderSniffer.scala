@@ -67,7 +67,9 @@ object HeaderSniffer {
     if (headerIdx == 0)
       spark.read.schema(struct).option("header", "true").csv(path)
     else {
-      val body = spark.sparkContext.textFile(path).zipWithIndex()
+      // headerIdx counts CSV records, and the CSV reader skips blank lines:
+      // drop them by its rule before numbering the lines.
+      val body = spark.sparkContext.textFile(path).filter(_.trim.nonEmpty).zipWithIndex()
         .collect { case (line, i) if i > headerIdx => line }
       val ds = spark.createDataset(body)(org.apache.spark.sql.Encoders.STRING)
       spark.read.schema(struct).option("header", "false").csv(ds)

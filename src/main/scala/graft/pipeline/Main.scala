@@ -58,38 +58,29 @@ object Main {
     }
 
     // The load runs inside Pipeline.run, while the report's consolidated
-    // frame is pinned, and the reports' loads may run at once: each keeps
-    // its own error entry. They are recorded in report order after the
-    // input and classify errors, as the summary lists them.
-    val loadErrors = TrieMap.empty[ReportType, String]
+    // frame is pinned, and the reports' loads may run at once; one that
+    // throws fails its report's inputs there. A streak gap only warns, in
+    // report order after the input and classify errors.
+    val gapWarnings = TrieMap.empty[ReportType, String]
     def load(r: Pipeline.ReportResult): Unit = {
       val name = r.report.schema.name
-      try {
-        val report = PartitionOverwriteSink.load(spark,
-          withLoadColumns(r.report, r.kept), loadDateColumn(r.report),
-          s"$targetDir/${name.replace(' ', '_').toLowerCase}",
-          s"$targetDir/audit", name, ctx.runStamp)
-        if (report.gaps > 0)
-          loadErrors.put(r.report, s"$name: ${report.gaps} gap(s) between date streaks")
-      } catch {
-        case e: Exception => loadErrors.put(r.report, s"$name: ${e.getMessage}")
-      }
+      val report = PartitionOverwriteSink.load(spark,
+        withLoadColumns(r.report, r.kept), loadDateColumn(r.report),
+        s"$targetDir/${name.replace(' ', '_').toLowerCase}",
+        s"$targetDir/audit", name, ctx.runStamp)
+      if (report.gaps > 0)
+        gapWarnings.put(r.report, s"$name: ${report.gaps} gap(s) between date streaks")
     }
 
     val res = Pipeline.run(spark, inputDir, exportDir, ctx.runStamp, trainHours, history,
       load = load)
     res.errors.foreach(e => errors.record("input", s"${e.path}: ${e.message}"))
     res.unclassified.foreach(p => errors.record("classify", s"no report header found: $p"))
-    ReportType.all.flatMap(loadErrors.get).foreach(errors.record("load", _))
+    ReportType.all.flatMap(gapWarnings.get).foreach(errors.record("load", _))
 
-    // Archive only inputs whose every unit was read successfully (failed
-    // inputs stay for the next run, as in the reference). Error paths may
-    // name a sheet ("file.xlsx#sheet2") — the whole workbook stays.
-    val failed = (res.errors.map(_.path) ++ res.unclassified)
-      .map(_.takeWhile(_ != '#')).toSet
-    val processed = (Pipeline.discover(inputDir, ".csv") ++
-      Pipeline.discover(inputDir, ".xlsx")).filterNot(failed)
-    try Archival.archive(processed, archiveDir)
+    // Archive only the inputs the run finished; failed ones stay for the
+    // next run, as in the reference.
+    try Archival.archive(res.done, archiveDir)
     catch { case e: Exception => errors.record("archive", String.valueOf(e.getMessage)) }
 
     println(errors.summary)
@@ -107,9 +98,10 @@ object Main {
     def history =
       if (args.length > 5) spark.read.parquet(args(5))
       else spark.emptyDataFrame
-    val code = run(spark, inputDir, exportDir, targetDir, archiveDir,
-      trainHours, history, s"$targetDir/version_control.txt")
-    spark.stop()
+    val code =
+      try run(spark, inputDir, exportDir, targetDir, archiveDir,
+        trainHours, history, s"$targetDir/version_control.txt")
+      finally spark.stop()
     if (code != 0) sys.exit(code)
   }
 }

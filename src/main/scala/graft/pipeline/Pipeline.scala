@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.io.File
 
-import scala.util.{Failure, Try}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -45,7 +43,7 @@ object Pipeline {
       rejects: DataFrame,
       missingTrainNumbers: Option[DataFrame])
   final case class RunResult(results: Seq[ReportResult], errors: Seq[InputError],
-      unclassified: Seq[String])
+      unclassified: Seq[String], done: Seq[String])
 
   /** One classified input unit: a CSV file, or one sheet of an xlsx
     * workbook (S2 — sheet enumeration makes (file, sheet) the unit).
@@ -58,7 +56,7 @@ object Pipeline {
   /** S1 — enumerate candidate input files (driver-side, like the
     * reference's `os.listdir`).
     */
-  def discover(inputDir: String, suffix: String = ".csv"): Seq[String] = {
+  def discover(inputDir: String, suffix: String): Seq[String] = {
     val files = Option(new File(inputDir).listFiles()).getOrElse(Array.empty)
     files.filter(f => f.isFile && f.getName.endsWith(suffix))
       .map(_.getPath).sorted.toIndexedSeq
@@ -87,15 +85,22 @@ object Pipeline {
     *
     * One pool phase over files, the CSVs then the workbooks, each in path
     * order; a workbook opens once for all its sheets ([[Xlsx.sniffSheets]]).
-    * A workbook that cannot be opened, or lists no sheets, is unclassified
-    * as `path`; a sheet that cannot be parsed or matches no header as
-    * `path#sheet<i>`.
     */
   def classifyAll(spark: SparkSession, inputDir: String,
       parallelism: Int = DriverPoolParallelism)
       : (Seq[ClassifiedInput], Seq[String]) = {
+    val all = classifyFiles(spark, inputDir, parallelism).flatMap(_._2)
+    (all.collect { case Right(c) => c }, all.collect { case Left(p) => p })
+  }
+
+  /** Each listed file with its units. A workbook that cannot be opened, or
+    * lists no sheets, is unclassified as `path`; a sheet that cannot be
+    * parsed or matches no header as `path#sheet<i>`.
+    */
+  private def classifyFiles(spark: SparkSession, inputDir: String, parallelism: Int)
+      : Seq[(String, Seq[Either[String, ClassifiedInput]])] = {
     val files = discover(inputDir, ".csv") ++ discover(inputDir, ".xlsx")
-    val all = DriverPool.traverse("classify", files, parallelism) { p =>
+    files.zip(DriverPool.traverse("classify", files, parallelism) { p =>
       if (p.endsWith(".csv"))
         Seq(HeaderSniffer.classifyCsv(spark, p)
           .map { case (idx, rep) => ClassifiedInput(p, None, idx, rep) }.toRight(p))
@@ -108,8 +113,7 @@ object Pipeline {
             .toRight(s"$p#sheet$i")
         }
       }
-    }.flatten
-    (all.collect { case Right(c) => c }, all.collect { case Left(p) => p })
+    })
   }
 
   /** C2 — dispatch one classified input to its reader. Any throw is
@@ -133,10 +137,10 @@ object Pipeline {
       val out = report match {
         case ReportType.TrainList =>
           val r = TrainListReader(raw, trainHours, history)
-          if (!r.missingTrainNumbers.isEmpty) {
-            val missing = r.missingTrainNumbers.limit(20).collect().map(_.get(0)).mkString(", ")
-            Left(InputError(input.display, s"train numbers missing from departure times: $missing"))
-          } else Right(ReaderOutput(r.good, r.rejects))
+          val missing = r.missingTrainNumbers.limit(20).collect()
+          if (missing.nonEmpty) Left(InputError(input.display,
+            s"train numbers missing from departure times: ${missing.map(_.get(0)).mkString(", ")}"))
+          else Right(ReaderOutput(r.good, r.rejects))
         case ReportType.Occupancy      => Right(OccupancyReader(raw))
         case ReportType.BookingPayment => Right(BookingPaymentReader(raw))
       }
@@ -158,6 +162,11 @@ object Pipeline {
     * ordinal) — exact pandas stable-sort keep-last parity — and drops
     * them from the outputs.
     *
+    * Every failure is a value (C3): a failed read is its input's
+    * [[InputError]]; a report whose later steps throw records
+    * `"<report name>: <cause>"` against each input it read cleanly. `done`
+    * is the listed files whose every unit classified and finished its chain.
+    *
     * @param parallelism driver-pool width for all three fan-outs: the
     *   classify, the report types (each report's read → consolidate →
     *   side channels → load chain runs beside the others'), and each
@@ -167,71 +176,70 @@ object Pipeline {
     *   the report's consolidated frame is still persisted, so a load of
     *   `kept` reads the pin instead of re-running the readers and the
     *   window. It may be called concurrently for different reports, so
-    *   it must be thread-safe. If it (or any step of a report) throws,
-    *   the other reports still run to completion, and `run` then rethrows
-    *   the first failure in report order with the later ones suppressed.
-    *   The frames in the returned [[RunResult]] are unpinned and
-    *   recompute when used.
+    *   it must be thread-safe. An `Exception` it throws fails its report
+    *   as above. The frames in the returned [[RunResult]] are unpinned
+    *   and recompute when used.
     */
   def run(spark: SparkSession, inputDir: String, exportDir: String, runStamp: String,
       trainHours: => DataFrame, history: => DataFrame,
       parallelism: Int = DriverPoolParallelism,
       load: ReportResult => Unit = _ => ()): RunResult = {
-    val (classified, unclassified) = classifyAll(spark, inputDir, parallelism)
+    val files = classifyFiles(spark, inputDir, parallelism)
+    val units = files.flatMap(_._2)
+    val classified = units.collect { case Right(c) => c }
     // Each by-name dimension reads a file: read them at most once per run,
     // and not at all when the batch has no Train List input.
     lazy val hours = trainHours
     lazy val hist = history
 
-    def runReport(report: ReportType): (Option[ReportResult], Seq[InputError]) = {
-      val errors = Seq.newBuilder[InputError]
+    def runReport(report: ReportType): (Option[ReportResult], Seq[(ClassifiedInput, InputError)]) = {
       val mine = classified.filter(_.report == report)
-      val result = if (mine.isEmpty) None
-      else {
-        // per-(file, sheet) reads fan out on the driver pool: the xlsx
-        // parses and per-input guard actions are the serial cost for a
-        // workbook batch; order (and so the D1 fileOrd tiebreaker and
-        // error attribution) is preserved by the pool.
-        val reads = DriverPool.traverse("read", mine.zipWithIndex.toSeq, parallelism) {
-          case (ci, ord) => readInput(spark, ci, ord, hours, hist)
-        }
-        reads.collect { case Left(e) => e }.foreach(errors += _)
-        val ok = reads.collect { case Right(o) => o }
-        if (ok.isEmpty) None
-        else {
-          val tiebreak = Seq(col("__file_ord"), col("__row_ord"))
-          val ordering = Consolidate.ordering(
-            report.schema.sortKeys.filter(k => ok.head.good.columns.contains(k)),
-            Consolidate.SortMode.Lexicographic) ++ tiebreak
-          val pin = Consolidate.numbered(ok.map(_.good), report.schema.dedupKeys, ordering)
-            .drop("__file_ord", "__row_ord")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val (kept, dups) = KeepLastDedup.split(pin)
-            val rejects = Consolidate.union(ok.map(_.rejects)).drop("__file_ord", "__row_ord")
-            val r = ReportResult(report, kept, dups, rejects, None)
-            // K1-K3 side channels, then the caller's load
-            val name = report.schema.name
-            SideChannelCsv.writeErrors(rejects, exportDir, name, runStamp)
-            SideChannelCsv.writeDuplicates(dups, exportDir, name, runStamp)
-            SideChannelCsv.writeSnapshot(kept, exportDir, name, runStamp)
-            load(r)
-            Some(r)
-          } finally { pin.unpersist(); () }
-        }
+      // per-(file, sheet) reads fan out on the driver pool: the xlsx
+      // parses and per-input guard actions are the serial cost for a
+      // workbook batch; order (and so the D1 fileOrd tiebreaker and
+      // error attribution) is preserved by the pool.
+      val reads = mine.zip(DriverPool.traverse("read", mine.zipWithIndex, parallelism) {
+        case (ci, ord) => readInput(spark, ci, ord, hours, hist)
+      })
+      val readErrors = reads.collect { case (ci, Left(e)) => (ci, e) }
+      val ok = reads.collect { case (_, Right(o)) => o }
+      if (ok.isEmpty) (None, readErrors)
+      else try {
+        val tiebreak = Seq(col("__file_ord"), col("__row_ord"))
+        val ordering = Consolidate.ordering(
+          report.schema.sortKeys.filter(k => ok.head.good.columns.contains(k)),
+          Consolidate.SortMode.Lexicographic) ++ tiebreak
+        val pin = Consolidate.numbered(ok.map(_.good), report.schema.dedupKeys, ordering)
+          .drop("__file_ord", "__row_ord")
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (kept, dups) = KeepLastDedup.split(pin)
+          val rejects = Consolidate.union(ok.map(_.rejects)).drop("__file_ord", "__row_ord")
+          val r = ReportResult(report, kept, dups, rejects, None)
+          // K1-K3 side channels, then the caller's load
+          val name = report.schema.name
+          SideChannelCsv.writeErrors(rejects, exportDir, name, runStamp)
+          SideChannelCsv.writeDuplicates(dups, exportDir, name, runStamp)
+          SideChannelCsv.writeSnapshot(kept, exportDir, name, runStamp)
+          load(r)
+          (Some(r), readErrors)
+        } finally { pin.unpersist(); () }
+      } catch {
+        case e: Exception =>
+          (None, reads.map { case (ci, read) =>
+            (ci, read.fold(identity,
+              _ => InputError(ci.display, s"${report.schema.name}: ${e.getMessage}")))
+          })
       }
-      (result, errors.result())
     }
 
     // A report's failure is kept as a value, so it neither cancels nor
     // skips another report: a load stopped mid-protocol could leave a
     // committed write without its audit rows.
-    val outcomes = DriverPool.traverse("report", ReportType.all, parallelism)(r => Try(runReport(r)))
-    outcomes.collect { case Failure(e) => e } match {
-      case first +: later => later.foreach(first.addSuppressed); throw first
-      case _              =>
-    }
-    val done = outcomes.map(_.get)
-    RunResult(done.flatMap(_._1), done.flatMap(_._2), unclassified)
+    val outcomes = DriverPool.traverse("report", ReportType.all, parallelism)(runReport)
+    val failed = outcomes.flatMap(_._2)
+    val finished = classified.toSet -- failed.map(_._1)
+    RunResult(outcomes.flatMap(_._1), failed.map(_._2), units.collect { case Left(p) => p },
+      files.collect { case (p, us) if us.forall(_.exists(finished)) => p })
   }
 }

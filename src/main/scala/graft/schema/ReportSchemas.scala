@@ -31,12 +31,7 @@ final case class ReportSchema(
     dedupKeys: Seq[String],
     sortKeys: Seq[String]) {
   def header: Seq[String] = columns.map(_.source)
-  def sourceNames: Seq[String] = columns.map(_.source)
-  def dbNames: Seq[String] = columns.map(_.db)
   def mandatorySources: Seq[String] = columns.filter(_.notNull).map(_.source)
-  def tsSources: Seq[String] = columns.filter(_.kind == ColKind.Ts).map(_.source)
-  def numSources: Seq[String] = columns.filter(_.kind == ColKind.Num).map(_.source)
-  def strSources: Seq[String] = columns.filter(_.kind == ColKind.Str).map(_.source)
   /** All-string read schema (S5, `dtype=str`). */
   def allStringStruct: StructType =
     StructType(columns.map(c => StructField(c.source, StringType, nullable = true)))

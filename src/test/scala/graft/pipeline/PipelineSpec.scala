@@ -122,6 +122,19 @@ class PipelineSpec extends SparkSuite {
     val df = HeaderSniffer.readClassified(spark, path, 3, ReportType.Occupancy)
     assert(df.count() === 2)
     assert(df.columns.length === 24)
+
+    // blank and whitespace-only lines above the header: the sniff's record
+    // index skips them, as the CSV reader does, and so must the body read
+    val blank = s"$dir/occ_blank.csv"
+    Files.writeString(Paths.get(blank), Seq("junk0,x", "", "  ",
+      Schemas.occupancy.header.mkString(","),
+      occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q"),
+      occRow("2024-01-02 00:00:00", "CD", "T2", "C2", "6", "q")).mkString("\n"))
+    val sniffed = HeaderSniffer.classifyCsv(spark, blank)
+    assert(sniffed === Some((1, ReportType.Occupancy)))
+    val out = OccupancyReader(HeaderSniffer.readClassified(spark, blank, 1, ReportType.Occupancy))
+    assert(out.good.count() === 2)
+    assert(out.rejects.isEmpty)
   }
 
   test("pipeline run: consolidation, keep-last dedup, rejects, bad input isolated") {
@@ -395,7 +408,8 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("Main.run: full control loop — gate, load, archive, exit code") {
-    val in = tmpDir("graft-main-in")
+    // a '#' in the directory must not be read as a sheet suffix
+    val in = tmpDir("graft-main#in")
     val exp = tmpDir("graft-main-exp")
     val tgt = tmpDir("graft-main-tgt")
     val arc = tmpDir("graft-main-arc")
@@ -500,39 +514,91 @@ class PipelineSpec extends SparkSuite {
     // the Occupancy target is a regular file, so its partitioned write fails
     Files.writeString(Paths.get(s"$tgt/occupancy"), "not a table")
     val (hours, hist) = tlDims()
-    val code = Main.run(spark, in, tmpDir("graft-lfail-exp"), tgt, tmpDir("graft-lfail-arc"),
+    val arc = tmpDir("graft-lfail-arc")
+    val code = Main.run(spark, in, tmpDir("graft-lfail-exp"), tgt, arc,
       hours, hist, s"$tgt/version_control.txt")
     assert(code === 1)
     assert(Files.isRegularFile(Paths.get(s"$tgt/occupancy")))
     assert(spark.read.parquet(s"$tgt/train_list").count() === 2)
     assertNothingRunningOrPersisted()
+    // the failed report's inputs stay for the next run; the loaded ones move
+    assert(fileNames(in) === Seq("occ_a.csv", "occ_b.csv"))
+    assert(fileNames(arc) === Seq("tl_a.csv", "tl_b.csv"))
+  }
+
+  /** The sorted names of the files in `dir`. */
+  private def fileNames(dir: String): Seq[String] = new java.io.File(dir).list().toSeq.sorted
+
+  test("Main.run: a failing side channel records every input, archives nothing and returns 1") {
+    startFromEmptyCache()
+    val in = tmpDir("graft-sfail-in")
+    val tgt = tmpDir("graft-sfail-tgt")
+    val arc = tmpDir("graft-sfail-arc")
+    writeMultiReportInputs(in)
+    // the export directory is a regular file, so every side channel fails
+    val exp = s"${tmpDir("graft-sfail-exp")}/export"
+    Files.writeString(Paths.get(exp), "not a directory")
+    val (hours, hist) = tlDims()
+    val stdout = new java.io.ByteArrayOutputStream
+    val code = Console.withOut(stdout) {
+      Main.run(spark, in, exp, tgt, arc, hours, hist, s"$tgt/version_control.txt")
+    }
+    assert(code === 1)
+    val summary = stdout.toString("UTF-8")
+    for (f <- Seq("tl_a.csv", "tl_b.csv")) assert(summary.contains(s"[input] $in/$f: Train List: "))
+    for (f <- Seq("occ_a.csv", "occ_b.csv")) assert(summary.contains(s"[input] $in/$f: Occupancy: "))
+    assert(fileNames(in) === Seq("occ_a.csv", "occ_b.csv", "tl_a.csv", "tl_b.csv"))
+    assert(fileNames(arc).isEmpty)
+    assertNothingRunningOrPersisted()
+  }
+
+  test("Main.run: a file that arrives after the run lists its inputs stays in the input directory") {
+    val in = tmpDir("graft-late-in")
+    val tgt = tmpDir("graft-late-tgt")
+    val arc = tmpDir("graft-late-arc")
+    writeMultiReportInputs(in)
+    val (hoursDf, hist) = tlDims()
+    // the Train List reads force the dimension after the listing
+    def hours = {
+      Files.writeString(Paths.get(s"$in/late.csv"), occCsv(Seq(
+        occRow("2024-01-05 00:00:00", "AB", "T1", "C1", "5", "q1")), junkRows = 0))
+      hoursDf
+    }
+    val code = Main.run(spark, in, tmpDir("graft-late-exp"), tgt, arc, hours, hist,
+      s"$tgt/version_control.txt")
+    assert(code === 0)
+    assert(fileNames(in) === Seq("late.csv"))
+    assert(fileNames(arc) === Seq("occ_a.csv", "occ_b.csv", "tl_a.csv", "tl_b.csv"))
   }
 
   private final class HookFailure(msg: String) extends RuntimeException(msg)
 
-  test("Pipeline.run: a throwing load hook neither cancels nor skips the other reports; run rethrows it") {
+  test("Pipeline.run: a throwing load hook neither cancels nor skips the other reports; its failure is recorded against its inputs") {
     startFromEmptyCache()
     val in = tmpDir("graft-iso-in")
     writeMultiReportInputs(in)
     val (hours, hist) = tlDims()
     val occDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    intercept[HookFailure] {
-      Pipeline.run(spark, in, tmpDir("graft-iso-out"), "20240101T000000", hours, hist,
-        load = r => r.report match {
-          case ReportType.TrainList => throw new HookFailure("train list")
-          case _ => assert(r.kept.count() === 2); occDone.set(true)
-        })
-    }
+    val res = Pipeline.run(spark, in, tmpDir("graft-iso-out"), "20240101T000000", hours, hist,
+      load = r => r.report match {
+        case ReportType.TrainList => throw new HookFailure("train list")
+        case _ => assert(r.kept.count() === 2); occDone.set(true)
+      })
     assert(occDone.get, "the Occupancy hook did not run to completion")
+    assert(res.done === Seq(s"$in/occ_a.csv", s"$in/occ_b.csv"))
+    assert(res.errors === Seq(
+      Pipeline.InputError(s"$in/tl_a.csv", "Train List: train list"),
+      Pipeline.InputError(s"$in/tl_b.csv", "Train List: train list")))
+    assert(res.results.map(_.report) === Seq(ReportType.Occupancy))
     assertNothingRunningOrPersisted()
 
-    // both throw: the first in report order wins, the later is suppressed
-    val e = intercept[HookFailure] {
-      Pipeline.run(spark, in, tmpDir("graft-iso-out2"), "20240101T000000", hours, hist,
-        load = r => throw new HookFailure(r.report.schema.name))
-    }
-    assert(e.getMessage === "Train List")
-    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("Occupancy"))
+    // both throw: both failures are recorded, in report order
+    val both = Pipeline.run(spark, in, tmpDir("graft-iso-out2"), "20240101T000000", hours, hist,
+      load = r => throw new HookFailure(r.report.schema.name))
+    assert(both.errors.map(e => (e.path, e.message)) === Seq(
+      (s"$in/tl_a.csv", "Train List: Train List"), (s"$in/tl_b.csv", "Train List: Train List"),
+      (s"$in/occ_a.csv", "Occupancy: Occupancy"), (s"$in/occ_b.csv", "Occupancy: Occupancy")))
+    assert(both.done.isEmpty && both.results.isEmpty)
     assertNothingRunningOrPersisted()
   }
 
