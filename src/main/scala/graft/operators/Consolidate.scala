@@ -38,7 +38,7 @@ object Consolidate {
   }
 
   def union(dfs: Seq[DataFrame]): DataFrame = {
-    require(dfs.nonEmpty, "empty batch (reference P3 guard)")
+    require(dfs.nonEmpty, "union of no frames")
     dfs.reduce(_.unionByName(_))
   }
 

@@ -2,7 +2,11 @@ package graft.pipeline
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,11 +27,13 @@ import graft.sources.Xlsx
   * sheet is logged and skipped, the batch proceeds) and `:1662-1875` (main).
   *
   * Scale notes: classification collects ≤50 rows per file (the reference's
-  * own bound); everything else executes distributed. Each report type's
-  * union → clean → keep-last window is computed ONCE: the row-numbered
-  * frame is persisted while the duplicates and snapshot channels and the
-  * caller's load read it (the reference writes all three from one
-  * in-memory frame, `:1752-1797`), and released before `run` returns.
+  * own bound); everything else executes distributed. The reads only build
+  * plans. Each report type's union → clean → keep-last window is computed
+  * ONCE, by the count that persists the row-numbered frame and observes
+  * every input's P3 and J1 guards on the way; the duplicates and snapshot
+  * channels and the caller's load then read that pin (the reference writes
+  * all three from one in-memory frame, `:1752-1797`), and it is released
+  * before `run` returns.
   * The rejects channel is its own single pass over the readers. The three
   * report types share nothing but the audit table, so their chains run
   * beside each other on the driver pool; the reference handles them one
@@ -116,8 +122,10 @@ object Pipeline {
     })
   }
 
-  /** C2 — dispatch one classified input to its reader. Any throw is
-    * captured (C3) and the input skipped.
+  /** C2 — dispatch one classified input to its reader and build its plan;
+    * it runs no Spark action of its own (a by-name dimension may run its
+    * read when first used). Any throw is captured (C3) and the input
+    * skipped. The P3 and J1 guards run in [[run]], on the report's pin.
     */
   def readInput(spark: SparkSession, input: ClassifiedInput,
       fileOrd: Int, trainHours: => DataFrame, history: => DataFrame)
@@ -134,27 +142,80 @@ object Pipeline {
         // per-file row id reproduce pandas' stable keep-last across a batch.
         .withColumn("__file_ord", lit(fileOrd))
         .withColumn("__row_ord", monotonically_increasing_id())
-      val out = report match {
-        case ReportType.TrainList =>
-          val r = TrainListReader(raw, trainHours, history)
-          val missing = r.missingTrainNumbers.limit(20).collect()
-          if (missing.nonEmpty) Left(InputError(input.display,
-            s"train numbers missing from departure times: ${missing.map(_.get(0)).mkString(", ")}"))
-          else Right(ReaderOutput(r.good, r.rejects))
-        case ReportType.Occupancy      => Right(OccupancyReader(raw))
-        case ReportType.BookingPayment => Right(BookingPaymentReader(raw))
-      }
-      // P3 — empty-batch guard (reference raises when 0 rows survive the
-      // clean, `reports_exporter_v0.83.py:606-607`); the input is isolated
-      // like any other failure. This is a deliberate per-input action
-      // (limit-1 count), matching the reference's per-sheet shape[0]
-      // check — the only eager work in the otherwise-lazy per-report plan.
-      out.filterOrElse(!_.good.isEmpty, InputError(input.display, EmptyBatchMessage))
+      Right(report match {
+        case ReportType.TrainList      => TrainListReader(raw, trainHours, history)
+        case ReportType.Occupancy      => OccupancyReader(raw)
+        case ReportType.BookingPayment => BookingPaymentReader(raw)
+      })
     } catch {
       case e: Exception => Left(InputError(input.display, String.valueOf(e.getMessage)))
     }
 
   val EmptyBatchMessage = "empty batch: no rows survived cleaning (P3 guard)"
+
+  /** J1's message: at most 20 of an input's train numbers that have no
+    * departure time, sorted.
+    */
+  private def missingMessage(trainNumbers: Seq[String]): String =
+    s"train numbers missing from departure times: ${trainNumbers.distinct.sorted.take(20).mkString(", ")}"
+
+  /** The train number J1 reports; P4 has made an empty one NULL. */
+  private val reportedTrainNumber = coalesce(col("train_number"), lit(""))
+
+  /** The report's consolidated frame over `inputs` (file ordinal → good
+    * rows), persisted and built by one `count`, with each input's P3 and J1
+    * verdict from that same job. An [[Observation]] on the union, below the
+    * window, collects the ordinals that hold a good row (P3: a missing one
+    * is an empty batch, reference `reports_exporter_v0.83.py:606-607`) and,
+    * for Train List, the (ordinal, train number) pairs that match
+    * [[TrainListReader.missingDeparture]] (J1, `:627-637`). Returns the pin
+    * and each failing ordinal's message, J1 before P3. A count that throws
+    * releases the pin.
+    */
+  private def pinChecked(report: ReportType, inputs: Seq[(Int, DataFrame)])
+      : (DataFrame, Map[Int, String]) = {
+    val seen = Observation()
+    val ord = col("__file_ord")
+    val j1 =
+      if (report != ReportType.TrainList) Nil
+      else Seq(collect_set(when(TrainListReader.missingDeparture,
+        struct(ord, reportedTrainNumber))).as("j1"))
+    val good = Consolidate.union(inputs.map(_._2))
+      .observe(seen, collect_set(ord).as("p3"), j1: _*)
+    val ordering = Consolidate.ordering(
+      report.schema.sortKeys.filter(k => good.columns.contains(k)),
+      Consolidate.SortMode.Lexicographic) ++ Seq(ord, col("__row_ord"))
+    val pin = Consolidate.numbered(Seq(good), report.schema.dedupKeys, ordering)
+      .drop("__file_ord", "__row_ord")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try pin.count() catch { case e: Throwable => pin.unpersist(); throw e }
+    // read only after the count returned; an entry may be absent when the
+    // union is empty
+    val observed = seen.get
+    def entries[T](name: String): Seq[T] =
+      observed.get(name).toSeq.flatMap(_.asInstanceOf[scala.collection.Seq[T]])
+    val present = entries[Int]("p3").toSet
+    val missing = entries[Row]("j1").groupMap(_.getInt(0))(_.getString(1))
+    (pin, inputs.flatMap { case (o, _) =>
+      missing.get(o).map(missingMessage)
+        .orElse(Option.when(!present(o))(EmptyBatchMessage)).map(o -> _)
+    }.toMap)
+  }
+
+  /** P3 and J1 on one input alone, J1 first; a throw is the input's
+    * failure. Run only to find the inputs that make a report's pin throw.
+    */
+  private def checkInput(report: ReportType, good: DataFrame): Option[String] =
+    try {
+      val missing =
+        if (report != ReportType.TrainList) Seq.empty[String]
+        else good.filter(TrainListReader.missingDeparture).select(reportedTrainNumber)
+          .distinct().collect().toSeq.map(_.getString(0))
+      if (missing.nonEmpty) Some(missingMessage(missing))
+      else Option.when(good.isEmpty)(EmptyBatchMessage)
+    } catch {
+      case e: Exception => Some(String.valueOf(e.getMessage))
+    }
 
   /** Full run over a directory of inputs (CSV files and xlsx workbooks).
     * Readers carry the tiebreaker columns through to consolidation, where
@@ -162,9 +223,16 @@ object Pipeline {
     * ordinal) — exact pandas stable-sort keep-last parity — and drops
     * them from the outputs.
     *
-    * Every failure is a value (C3): a failed read is its input's
+    * The P3 and J1 guards ride the action that builds each report's pin
+    * ([[pinChecked]]), before any side channel is written. An input that
+    * fails one is its [[InputError]], and the pin is built again without
+    * it; only that rare path computes the window twice. A pin that throws
+    * (a strict parse of a malformed dimension value, say) runs the guards
+    * on each input alone to find the inputs at fault, then pins the rest.
+    *
+    * Every failure is a value (C3): a failed read or guard is its input's
     * [[InputError]]; a report whose later steps throw records
-    * `"<report name>: <cause>"` against each input it read cleanly. `done`
+    * `"<report name>: <cause>"` against each of its other inputs. `done`
     * is the listed files whose every unit classified and finished its chain.
     *
     * @param parallelism driver-pool width for all three fan-outs: the
@@ -188,48 +256,69 @@ object Pipeline {
     val units = files.flatMap(_._2)
     val classified = units.collect { case Right(c) => c }
     // Each by-name dimension reads a file: read them at most once per run,
-    // and not at all when the batch has no Train List input.
+    // and not at all when the batch has no Train List input. Both reads
+    // start together; one that fails throws again where a Train List read
+    // uses it, which isolates that input.
     lazy val hours = trainHours
     lazy val hist = history
+    if (classified.exists(_.report == ReportType.TrainList))
+      try { DriverPool.traverse("dims", Seq(() => hours, () => hist), math.min(2, parallelism))(_()); () }
+      catch { case _: Exception => () }
 
     def runReport(report: ReportType): (Option[ReportResult], Seq[(ClassifiedInput, InputError)]) = {
       val mine = classified.filter(_.report == report)
       // per-(file, sheet) reads fan out on the driver pool: the xlsx
-      // parses and per-input guard actions are the serial cost for a
-      // workbook batch; order (and so the D1 fileOrd tiebreaker and
-      // error attribution) is preserved by the pool.
-      val reads = mine.zip(DriverPool.traverse("read", mine.zipWithIndex, parallelism) {
+      // parses are the serial cost for a workbook batch; order (and so the
+      // D1 fileOrd tiebreaker and error attribution) is preserved by the pool.
+      val reads = DriverPool.traverse("read", mine.zipWithIndex, parallelism) {
         case (ci, ord) => readInput(spark, ci, ord, hours, hist)
-      })
-      val readErrors = reads.collect { case (ci, Left(e)) => (ci, e) }
-      val ok = reads.collect { case (_, Right(o)) => o }
-      if (ok.isEmpty) (None, readErrors)
-      else try {
-        val tiebreak = Seq(col("__file_ord"), col("__row_ord"))
-        val ordering = Consolidate.ordering(
-          report.schema.sortKeys.filter(k => ok.head.good.columns.contains(k)),
-          Consolidate.SortMode.Lexicographic) ++ tiebreak
-        val pin = Consolidate.numbered(ok.map(_.good), report.schema.dedupKeys, ordering)
-          .drop("__file_ord", "__row_ord")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (kept, dups) = KeepLastDedup.split(pin)
-          val rejects = Consolidate.union(ok.map(_.rejects)).drop("__file_ord", "__row_ord")
-          val r = ReportResult(report, kept, dups, rejects, None)
-          // K1-K3 side channels, then the caller's load
-          val name = report.schema.name
-          SideChannelCsv.writeErrors(rejects, exportDir, name, runStamp)
-          SideChannelCsv.writeDuplicates(dups, exportDir, name, runStamp)
-          SideChannelCsv.writeSnapshot(kept, exportDir, name, runStamp)
-          load(r)
-          (Some(r), readErrors)
-        } finally { pin.unpersist(); () }
+      }
+      val outs = reads.zipWithIndex.collect { case (Right(out), o) => o -> out }.toMap
+      // each failed input's error, by file ordinal
+      val errors = mutable.Map(reads.zipWithIndex.collect { case (Left(e), o) => o -> e }: _*)
+      def fail(failed: Iterable[(Int, String)]): Unit =
+        failed.foreach { case (o, m) => errors(o) = InputError(mine(o).display, m) }
+
+      // the pin of the inputs that pass the guards, and those inputs
+      @tailrec def pinPassing(inputs: Seq[Int], checkedAlone: Boolean)
+          : Option[(DataFrame, Seq[Int])] =
+        if (inputs.isEmpty) None
+        else Try(pinChecked(report, inputs.map(o => o -> outs(o).good))) match {
+          case Success((pin, failed)) if failed.isEmpty => Some((pin, inputs))
+          case Success((pin, failed)) =>
+            pin.unpersist()
+            fail(failed)
+            pinPassing(inputs.filterNot(failed.contains), checkedAlone)
+          case Failure(_: Exception) if !checkedAlone =>
+            fail(inputs.zip(DriverPool.traverse("guard", inputs, parallelism)(o =>
+              checkInput(report, outs(o).good))).collect { case (o, Some(m)) => o -> m })
+            pinPassing(inputs.filterNot(errors.contains), checkedAlone = true)
+          case Failure(e) => throw e
+        }
+
+      def outcome(r: Option[ReportResult]) =
+        (r, mine.indices.flatMap(o => errors.get(o).map((mine(o), _))))
+      val ok = outs.keys.toSeq.sorted
+      try pinPassing(ok, checkedAlone = false) match {
+        case None => outcome(None)
+        case Some((pin, passing)) =>
+          try {
+            val (kept, dups) = KeepLastDedup.split(pin)
+            val rejects = Consolidate.union(passing.map(outs(_).rejects))
+              .drop("__file_ord", "__row_ord")
+            val r = ReportResult(report, kept, dups, rejects, None)
+            // K1-K3 side channels, then the caller's load
+            val name = report.schema.name
+            SideChannelCsv.writeErrors(rejects, exportDir, name, runStamp)
+            SideChannelCsv.writeDuplicates(dups, exportDir, name, runStamp)
+            SideChannelCsv.writeSnapshot(kept, exportDir, name, runStamp)
+            load(r)
+            outcome(Some(r))
+          } finally { pin.unpersist(); () }
       } catch {
         case e: Exception =>
-          (None, reads.map { case (ci, read) =>
-            (ci, read.fold(identity,
-              _ => InputError(ci.display, s"${report.schema.name}: ${e.getMessage}")))
-          })
+          fail(ok.filterNot(errors.contains).map(_ -> s"${report.schema.name}: ${e.getMessage}"))
+          outcome(None)
       }
     }
 

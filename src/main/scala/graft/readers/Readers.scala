@@ -79,27 +79,32 @@ object ReportReader {
 }
 
 /** Train List reader — the richest chain (reference `:461-806`):
-  * clean/split, J1 broadcast-join to scheduled departure times (unmatched
-  * train numbers are surfaced for the caller to abort on), the full F3-F11
-  * derive chain (rollover, service date, keys), J2 first-operation-time
-  * enrichment, U1 phone cleanup, renames.
+  * clean/split, J1 broadcast-join to scheduled departure times (a good row
+  * whose train has none matches [[missingDeparture]], for the caller to
+  * abort on), the full F3-F11 derive chain (rollover, service date, keys),
+  * J2 first-operation-time enrichment, U1 phone cleanup, renames.
   */
 object TrainListReader {
-  final case class Result(good: DataFrame, rejects: DataFrame, missingTrainNumbers: DataFrame)
+
+  /** J1 (reference `:627-637`, the post-join null check) over the reader's
+    * good rows: the train number has no dimension row, or its dimension row
+    * has a NULL departure time.
+    */
+  val missingDeparture: Column = col("train_hour").isNull
 
   /** @param trainHours dimension (train_number: string, departure_time:
     *   "HH:mm:ss" string) — the reference's `"AFC".train_departure_times`
     * @param history    prior payment operations (ticket_number,
     *   operation_date_time: timestamp) — source of min-per-ticket (J2)
     */
-  def apply(raw: DataFrame, trainHours: DataFrame, history: DataFrame): Result = {
+  def apply(raw: DataFrame, trainHours: DataFrame, history: DataFrame): ReaderOutput = {
     val schema = Schemas.trainList
     val (good0, rejects) = ReportReader.cleanAndSplit(raw, schema)
 
     // J1 — tiny dimension, broadcast; missing keys are a hard error upstream.
     val dim = trainHours.select(
       col("train_number").as("Train Number"), col("departure_time"))
-    val (joined, missing) = Enrichment.broadcastLookup(good0, dim, "Train Number", "departure_time")
+    val (joined, _) = Enrichment.broadcastLookup(good0, dim, "Train Number", "departure_time")
 
     val dep = col("Departure Date")
     val depShort = fmtDateShort(dep)
@@ -138,7 +143,7 @@ object TrainListReader {
         "service_train_departure_date_short" -> fmtDateShort(serviceDate(tdt)),
         "operation_date_time"   -> col("__first_op"),
         "operation_date"        -> fmtDateShort(col("__first_op"))))
-    Result(out, rejects, missing)
+    ReaderOutput(out, rejects)
   }
 }
 

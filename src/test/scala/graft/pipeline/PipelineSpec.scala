@@ -20,14 +20,15 @@ class PipelineSpec extends SparkSuite {
   import spark.implicits._
 
   /** Most Spark jobs `Main.run` may issue on `writeMultiReportInputs`.
-    * Measured: 39 in every run, since each load's write is its only
-    * action on its input. It was 48 or 49 while each load also ran a
-    * day-streak query beside its write (adaptive execution planned that
-    * in 3 or 4 jobs, depending on which of the two built the load's
-    * cached input first), and 69 when every sink re-ran the readers and
-    * the window.
+    * Measured: 33 in every run, since the P3 and J1 guards ride the count
+    * that builds each report's pin and the reads run no job. It was 39
+    * while each input ran its own guard jobs, 48 or 49 while each load
+    * also ran a day-streak query beside its write (adaptive execution
+    * planned that in 3 or 4 jobs, depending on which of the two built the
+    * load's cached input first), and 69 when every sink re-ran the readers
+    * and the window.
     */
-  private val MainRunJobs = 39
+  private val MainRunJobs = 33
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(name)
@@ -390,7 +391,8 @@ class PipelineSpec extends SparkSuite {
     val hist = Seq(("tkt1", java.sql.Timestamp.valueOf("2024-01-01 08:00:00")))
       .toDF("ticket_number", "operation_date_time")
     val res = TrainListReader(raw, hours, hist)
-    assert(res.missingTrainNumbers.as[String].collect().toSeq === Seq("T9"))
+    assert(res.good.filter(TrainListReader.missingDeparture).select("train_number")
+      .as[String].collect().toSeq === Seq("T9"))
     assert(res.good.columns.length === 53)
   }
 
@@ -476,6 +478,104 @@ class PipelineSpec extends SparkSuite {
       occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q1")), junkRows = 0))
     Pipeline.run(spark, occOnly, tmpDir("graft-dims-out2"), "20240101T000000", hours, hist)
     assert(hoursReads.get === 1 && histReads.get === 1)
+  }
+
+  test("Pipeline.run reads the two by-name dimensions at once") {
+    val in = tmpDir("graft-dims-both-in")
+    writeMultiReportInputs(in)
+    val (hoursDf, histDf) = tlDims()
+    // each dimension waits until both are being read: a serial read times out here
+    val bothIn = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[(String, Boolean)]
+    def hours = { bothIn.countDown(); met.add(("hours", bothIn.await(30, TimeUnit.SECONDS))); hoursDf }
+    def hist = { bothIn.countDown(); met.add(("history", bothIn.await(30, TimeUnit.SECONDS))); histDf }
+    val res = Pipeline.run(spark, in, tmpDir("graft-dims-both-out"), "20240101T000000", hours, hist)
+    assert(res.errors.isEmpty)
+    assert(met.asScala.toSeq.sorted === Seq(("history", true), ("hours", true)))
+  }
+
+  test("Pipeline.run: the reads of passing header-row-0 CSVs run no Spark job") {
+    val in = tmpDir("graft-noread-in")
+    writeMultiReportInputs(in)
+    val (hours, hist) = tlDims()
+    val (res, counts) = SparkCounts.of(spark) {
+      Pipeline.run(spark, in, tmpDir("graft-noread-out"), "20240101T000000", hours, hist)
+    }
+    assert(res.errors.isEmpty && res.done.size === 4)
+    // the guards ride each report's pin instead of a job per input
+    assert(counts.jobsLabelled("graft:read") === 0, counts)
+    assert(counts.jobsLabelled("graft:report") > 0, counts)
+  }
+
+  /** The decompressed bytes of one side-channel artifact, part by part. */
+  private def artifactBytes(exportDir: String, report: String, channel: String): Seq[Byte] =
+    new java.io.File(graft.sinks.SideChannelCsv.artifactPath(exportDir, report, channel,
+        "20240101T000000"))
+      .listFiles().filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName).toSeq
+      .flatMap { f =>
+        val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f))
+        try in.readAllBytes().toSeq finally in.close()
+      }
+
+  test("P3 + J1 on the pin: failing inputs are isolated, and the artifacts equal a batch without them") {
+    val (hours, hist) = tlDims()
+    val clean = tmpDir("graft-guard-clean")
+    writeMultiReportInputs(clean)
+    val mixed = tmpDir("graft-guard-mixed")
+    writeMultiReportInputs(mixed)
+    // every Date cell empty: all rows rejected (P3); train T9 has no departure time (J1)
+    Files.writeString(Paths.get(s"$mixed/occ_ab.csv"), occCsv(Seq(
+      occRow("", "AB", "T1", "C1", "8", "q8"),
+      occRow("", "EF", "T3", "C3", "9", "q9")), junkRows = 0))
+    Files.writeString(Paths.get(s"$mixed/tl_ab.csv"), tlCsv(Seq(
+      tlRow("2024-01-01 10:00:00", "T1", "tk1"),
+      tlRow("2024-01-04 10:00:00", "T9", "tk2"))))
+    val outClean = tmpDir("graft-guard-clean-out")
+    val outMixed = tmpDir("graft-guard-mixed-out")
+    val resClean = Pipeline.run(spark, clean, outClean, "20240101T000000", hours, hist)
+    val resMixed = Pipeline.run(spark, mixed, outMixed, "20240101T000000", hours, hist)
+    assert(resClean.errors.isEmpty)
+    assert(resMixed.errors === Seq(
+      Pipeline.InputError(s"$mixed/tl_ab.csv", "train numbers missing from departure times: T9"),
+      Pipeline.InputError(s"$mixed/occ_ab.csv", Pipeline.EmptyBatchMessage)))
+    assert(resMixed.done.map(p => Paths.get(p).getFileName.toString) ===
+      Seq("occ_a.csv", "occ_b.csv", "tl_a.csv", "tl_b.csv"))
+    for (report <- Seq("Train List", "Occupancy");
+         channel <- Seq("data exported", "duplicates", "error rows")) {
+      val bytes = artifactBytes(outClean, report, channel)
+      assert(bytes.nonEmpty || channel == "error rows", s"$report $channel")
+      assert(artifactBytes(outMixed, report, channel) === bytes, s"$report $channel")
+    }
+  }
+
+  test("P3 on the pin: a report whose every input holds no row records each input, and writes nothing") {
+    val in = tmpDir("graft-p3-none-in")
+    val out = tmpDir("graft-p3-none-out")
+    // a header-only sheet reads as a local frame with no partition at all
+    writeStrXlsx(s"$in/book.xlsx", Seq(Schemas.occupancy.header))
+    Files.writeString(Paths.get(s"$in/a.csv"), occCsv(Seq(
+      occRow("", "AB", "T1", "C1", "5", "q")), junkRows = 0))
+    val res = Pipeline.run(spark, in, out, "20240101T000000",
+      spark.emptyDataFrame, spark.emptyDataFrame)
+    assert(res.errors === Seq(
+      Pipeline.InputError(s"$in/a.csv", Pipeline.EmptyBatchMessage),
+      Pipeline.InputError(s"$in/book.xlsx#sheet0", Pipeline.EmptyBatchMessage)))
+    assert(res.results.isEmpty && res.done.isEmpty)
+    assert(new java.io.File(out).list().isEmpty)
+  }
+
+  test("C3: a dimension value that makes the pin throw isolates only the inputs that use it") {
+    val in = tmpDir("graft-c3-dim-in")
+    Files.writeString(Paths.get(s"$in/a.csv"), tlCsv(Seq(tlRow("2024-01-01 10:00:00", "T1", "tk1"))))
+    Files.writeString(Paths.get(s"$in/b.csv"), tlCsv(Seq(tlRow("2024-01-02 10:00:00", "T2", "tk2"))))
+    // T2's departure time fails the strict parse when the rows are computed
+    val hours = Seq(("T1", "09:30:00"), ("T2", "9h30")).toDF("train_number", "departure_time")
+    val (_, hist) = tlDims()
+    val res = Pipeline.run(spark, in, tmpDir("graft-c3-dim-out"), "20240101T000000", hours, hist)
+    assert(res.errors.map(_.path) === Seq(s"$in/b.csv"))
+    assert(res.done === Seq(s"$in/a.csv"))
+    val tl = res.results.find(_.report == ReportType.TrainList).get
+    assert(tl.kept.select("ticket_number").as[String].collect().toSeq === Seq("tk1"))
   }
 
   test("Main.run: each report consolidates once — snapshot equals loaded rows, job count pinned, nothing left persisted") {
