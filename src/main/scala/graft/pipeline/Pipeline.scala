@@ -6,7 +6,7 @@ import scala.annotation.tailrec
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -153,24 +153,26 @@ object Pipeline {
 
   val EmptyBatchMessage = "empty batch: no rows survived cleaning (P3 guard)"
 
-  /** J1's message: at most 20 of an input's train numbers that have no
-    * departure time, sorted.
+  /** J1's message for an input that fails it: at most 20 of its train
+    * numbers that have no departure time, sorted; the cap applies before
+    * the collect.
     */
-  private def missingMessage(trainNumbers: Seq[String]): String =
-    s"train numbers missing from departure times: ${trainNumbers.distinct.sorted.take(20).mkString(", ")}"
-
-  /** The train number J1 reports; P4 has made an empty one NULL. */
-  private val reportedTrainNumber = coalesce(col("train_number"), lit(""))
+  private def missingMessage(good: DataFrame): String = {
+    val numbers = good.filter(TrainListReader.missingDeparture)
+      .select(coalesce(col("train_number"), lit("")).as("n")) // P4 made an empty one NULL
+      .distinct().orderBy("n").limit(20).collect().map(_.getString(0))
+    s"train numbers missing from departure times: ${numbers.mkString(", ")}"
+  }
 
   /** The report's consolidated frame over `inputs` (file ordinal → good
     * rows), persisted and built by one `count`, with each input's P3 and J1
     * verdict from that same job. An [[Observation]] on the union, below the
     * window, collects the ordinals that hold a good row (P3: a missing one
     * is an empty batch, reference `reports_exporter_v0.83.py:606-607`) and,
-    * for Train List, the (ordinal, train number) pairs that match
+    * for Train List, the ordinals with a row that matches
     * [[TrainListReader.missingDeparture]] (J1, `:627-637`). Returns the pin
-    * and each failing ordinal's message, J1 before P3. A count that throws
-    * releases the pin.
+    * and each failing ordinal's message, J1 before P3. A throw releases
+    * the pin.
     */
   private def pinChecked(report: ReportType, inputs: Seq[(Int, DataFrame)])
       : (DataFrame, Map[Int, String]) = {
@@ -178,8 +180,7 @@ object Pipeline {
     val ord = col("__file_ord")
     val j1 =
       if (report != ReportType.TrainList) Nil
-      else Seq(collect_set(when(TrainListReader.missingDeparture,
-        struct(ord, reportedTrainNumber))).as("j1"))
+      else Seq(collect_set(when(TrainListReader.missingDeparture, ord)).as("j1"))
     val good = Consolidate.union(inputs.map(_._2))
       .observe(seen, collect_set(ord).as("p3"), j1: _*)
     val ordering = Consolidate.ordering(
@@ -188,34 +189,20 @@ object Pipeline {
     val pin = Consolidate.numbered(Seq(good), report.schema.dedupKeys, ordering)
       .drop("__file_ord", "__row_ord")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try pin.count() catch { case e: Throwable => pin.unpersist(); throw e }
-    // read only after the count returned; an entry may be absent when the
-    // union is empty
-    val observed = seen.get
-    def entries[T](name: String): Seq[T] =
-      observed.get(name).toSeq.flatMap(_.asInstanceOf[scala.collection.Seq[T]])
-    val present = entries[Int]("p3").toSet
-    val missing = entries[Row]("j1").groupMap(_.getInt(0))(_.getString(1))
-    (pin, inputs.flatMap { case (o, _) =>
-      missing.get(o).map(missingMessage)
-        .orElse(Option.when(!present(o))(EmptyBatchMessage)).map(o -> _)
-    }.toMap)
-  }
-
-  /** P3 and J1 on one input alone, J1 first; a throw is the input's
-    * failure. Run only to find the inputs that make a report's pin throw.
-    */
-  private def checkInput(report: ReportType, good: DataFrame): Option[String] =
     try {
-      val missing =
-        if (report != ReportType.TrainList) Seq.empty[String]
-        else good.filter(TrainListReader.missingDeparture).select(reportedTrainNumber)
-          .distinct().collect().toSeq.map(_.getString(0))
-      if (missing.nonEmpty) Some(missingMessage(missing))
-      else Option.when(good.isEmpty)(EmptyBatchMessage)
-    } catch {
-      case e: Exception => Some(String.valueOf(e.getMessage))
-    }
+      pin.count()
+      // read only after the count returned; an entry may be absent when
+      // the union is empty
+      val observed = seen.get
+      def ords(name: String): Set[Int] =
+        observed.get(name).toSet.flatMap((s: Any) => s.asInstanceOf[scala.collection.Seq[Int]])
+      val (present, missing) = (ords("p3"), ords("j1"))
+      (pin, inputs.flatMap { case (o, g) =>
+        (if (missing(o)) Some(missingMessage(g))
+         else Option.when(!present(o))(EmptyBatchMessage)).map(o -> _)
+      }.toMap)
+    } catch { case e: Throwable => pin.unpersist(); throw e }
+  }
 
   /** Full run over a directory of inputs (CSV files and xlsx workbooks).
     * Readers carry the tiebreaker columns through to consolidation, where
@@ -227,8 +214,9 @@ object Pipeline {
     * ([[pinChecked]]), before any side channel is written. An input that
     * fails one is its [[InputError]], and the pin is built again without
     * it; only that rare path computes the window twice. A pin that throws
-    * (a strict parse of a malformed dimension value, say) runs the guards
-    * on each input alone to find the inputs at fault, then pins the rest.
+    * (a strict parse of a malformed dimension value, say) is built again
+    * for each input alone: an input whose own pin throws or fails a guard
+    * is at fault, and the rest are pinned together.
     *
     * Every failure is a value (C3): a failed read or guard is its input's
     * [[InputError]]; a report whose later steps throw records
@@ -256,17 +244,19 @@ object Pipeline {
     val units = files.flatMap(_._2)
     val classified = units.collect { case Right(c) => c }
     // Each by-name dimension reads a file: read them at most once per run,
-    // and not at all when the batch has no Train List input. Both reads
-    // start together; one that fails throws again where a Train List read
-    // uses it, which isolates that input.
+    // and not at all when the batch has no Train List input.
     lazy val hours = trainHours
     lazy val hist = history
-    if (classified.exists(_.report == ReportType.TrainList))
-      try { DriverPool.traverse("dims", Seq(() => hours, () => hist), math.min(2, parallelism))(_()); () }
-      catch { case _: Exception => () }
 
     def runReport(report: ReportType): (Option[ReportResult], Seq[(ClassifiedInput, InputError)]) = {
       val mine = classified.filter(_.report == report)
+      // The Train List reads use both dimensions: start both reads together,
+      // inside this chain so that the other reports do not wait for them.
+      // One that fails throws again where a read uses it, which isolates
+      // that input.
+      if (report == ReportType.TrainList && mine.nonEmpty)
+        try { DriverPool.traverse("dims", Seq(() => hours, () => hist), math.min(2, parallelism))(_()); () }
+        catch { case _: Exception => () }
       // per-(file, sheet) reads fan out on the driver pool: the xlsx
       // parses are the serial cost for a workbook batch; order (and so the
       // D1 fileOrd tiebreaker and error attribution) is preserved by the pool.
@@ -290,8 +280,12 @@ object Pipeline {
             fail(failed)
             pinPassing(inputs.filterNot(failed.contains), checkedAlone)
           case Failure(_: Exception) if !checkedAlone =>
+            // pin each input alone: a throw, or a failed guard, is its error
             fail(inputs.zip(DriverPool.traverse("guard", inputs, parallelism)(o =>
-              checkInput(report, outs(o).good))).collect { case (o, Some(m)) => o -> m })
+              Try(pinChecked(report, Seq(o -> outs(o).good))) match {
+                case Success((pin, failed)) => pin.unpersist(); failed.get(o)
+                case Failure(e) => Some(String.valueOf(e.getMessage))
+              })).collect { case (o, Some(m)) => o -> m })
             pinPassing(inputs.filterNot(errors.contains), checkedAlone = true)
           case Failure(e) => throw e
         }

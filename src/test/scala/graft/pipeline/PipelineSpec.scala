@@ -494,6 +494,33 @@ class PipelineSpec extends SparkSuite {
     assert(met.asScala.toSeq.sorted === Seq(("history", true), ("hours", true)))
   }
 
+  test("Pipeline.run: the dimension reads hold back no other report's chain") {
+    val in = tmpDir("graft-dims-aside-in")
+    writeMultiReportInputs(in)
+    val (hoursDf, histDf) = tlDims()
+    // each dimension waits for the Occupancy load: a read ahead of the report chains times out here
+    val occLoaded = new CountDownLatch(1)
+    val met = new ConcurrentLinkedQueue[(String, Boolean)]
+    def hours = { met.add(("hours", occLoaded.await(30, TimeUnit.SECONDS))); hoursDf }
+    def hist = { met.add(("history", occLoaded.await(30, TimeUnit.SECONDS))); histDf }
+    val res = Pipeline.run(spark, in, tmpDir("graft-dims-aside-out"), "20240101T000000",
+      hours, hist, parallelism = 3,
+      load = r => if (r.report == ReportType.Occupancy) occLoaded.countDown())
+    assert(res.errors.isEmpty)
+    assert(met.asScala.toSeq.sorted === Seq(("history", true), ("hours", true)))
+  }
+
+  test("J1 on the pin: the message lists the input's 20 smallest missing train numbers, sorted") {
+    val in = tmpDir("graft-j1-cap-in")
+    val missing = (10 until 35).map(i => s"T$i")
+    Files.writeString(Paths.get(s"$in/a.csv"), tlCsv(
+      (missing.reverse :+ "T1").map(t => tlRow("2024-01-01 10:00:00", t, "tk1"))))
+    val (hours, hist) = tlDims()
+    val res = Pipeline.run(spark, in, tmpDir("graft-j1-cap-out"), "20240101T000000", hours, hist)
+    assert(res.errors === Seq(Pipeline.InputError(s"$in/a.csv",
+      s"train numbers missing from departure times: ${missing.take(20).mkString(", ")}")))
+  }
+
   test("Pipeline.run: the reads of passing header-row-0 CSVs run no Spark job") {
     val in = tmpDir("graft-noread-in")
     writeMultiReportInputs(in)
