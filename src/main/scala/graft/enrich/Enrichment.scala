@@ -18,23 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object Enrichment {
 
-  /** J1: broadcast-left-join enrichment + unmatched-key capture.
-    * "Missing" matches the reference's post-join null check
-    * (`reports_exporter_v0.83.py:631`): a key is missing when it has no
-    * dimension row OR when its dimension row carries a NULL probe value —
-    * both decided from the (tiny) dimension side, so the fact table never
-    * enters a shuffle.
-    * @return (enriched, missingKeys); the reference aborts when nonempty.
+  /** J1: broadcast-left-join enrichment. The tiny dimension is broadcast,
+    * so the fact table never enters a shuffle. A fact row whose key has no
+    * dimension row, or one with a NULL probe value, carries a NULL probe
+    * column: the reference's post-join null check
+    * (`reports_exporter_v0.83.py:631`) tests the enriched rows for it.
     */
-  def broadcastLookup(fact: DataFrame, dim: DataFrame, key: String,
-      probe: String): (DataFrame, DataFrame) = {
-    val enriched = fact.join(broadcast(dim), Seq(key), "left")
-    val factKeys = fact.select(col(key)).distinct()
-    val nullProbe = factKeys.join(
-      broadcast(dim.filter(col(probe).isNull).select(col(key))), Seq(key), "left_semi")
-    val missing = missingKeys(fact, dim, key).unionByName(nullProbe).distinct()
-    (enriched, missing)
-  }
+  def broadcastLookup(fact: DataFrame, dim: DataFrame, key: String): DataFrame =
+    fact.join(broadcast(dim), Seq(key), "left")
 
   /** Unmatched-key probe, scale-safe shape: distinct the fact keys FIRST
     * (shuffle carries one row per distinct key, not the fact table), then

@@ -19,22 +19,27 @@ import graft.sinks.SideChannelCsv
 import graft.sources.Xlsx
 
 /** C2/C3/C4 + §3.1 — the end-to-end batch pipeline: discover input files,
-  * classify each (S3/S4), dispatch to the per-type reader with per-input
-  * failure isolation, consolidate (union → keep-last dedup with an
-  * input-order tiebreaker), and write the three side channels.
+  * classify each (S3/S4), read each report type's inputs through its
+  * reader with per-input failure isolation, consolidate (keep-last dedup
+  * with an input-order tiebreaker), and write the three side channels.
   *
   * Reference: `reports_exporter_v0.83.py:1629-1656` (dispatcher; a failing
   * sheet is logged and skipped, the batch proceeds) and `:1662-1875` (main).
+  * The reference cleans and enriches each sheet on its own; here each
+  * report's raw inputs are unioned first (each row tagged with its input's
+  * ordinal) and its reader runs once over the union, so its plan holds one
+  * clean → enrich chain, one set of dimension broadcasts and one J2
+  * semi-join, however many inputs it has.
   *
   * Scale notes: classification collects ≤50 rows per file (the reference's
   * own bound); everything else executes distributed. The reads only build
-  * plans. Each report type's union → clean → keep-last window is computed
-  * ONCE, by the count that persists the row-numbered frame and observes
-  * every input's P3 and J1 guards on the way; the duplicates and snapshot
+  * plans. Each report type's read → keep-last window is computed ONCE, by
+  * the count that persists the row-numbered frame and observes every
+  * input's P3 and J1 guards on the way; the duplicates and snapshot
   * channels and the caller's load then read that pin (the reference writes
   * all three from one in-memory frame, `:1752-1797`), and it is released
   * before `run` returns.
-  * The rejects channel is its own single pass over the readers. The three
+  * The rejects channel is its own single pass over the reader. The three
   * report types share nothing but the audit table, so their chains run
   * beside each other on the driver pool; the reference handles them one
   * after another.
@@ -122,33 +127,46 @@ object Pipeline {
     })
   }
 
-  /** C2 — dispatch one classified input to its reader and build its plan;
-    * it runs no Spark action of its own (a by-name dimension may run its
-    * read when first used). Any throw is captured (C3) and the input
-    * skipped. The P3 and J1 guards run in [[run]], on the report's pin.
+  /** C2 — one classified input through its report's reader: the
+    * single-input composition of [[rawInput]] and [[readReport]]. It builds
+    * plans and runs no Spark action of its own (a by-name dimension may run
+    * its read when first used). Any throw is captured (C3) as the input's
+    * error. [[run]] does not call it: it reads each report's inputs once,
+    * as a union.
     */
   def readInput(spark: SparkSession, input: ClassifiedInput,
       fileOrd: Int, trainHours: => DataFrame, history: => DataFrame)
       : Either[InputError, ReaderOutput] =
-    try {
-      val path = input.path
-      val report = input.report
+    rawInput(spark, input, fileOrd).flatMap(raw =>
+      captured(input)(readReport(input.report, raw, trainHours, history)))
+
+  private def captured[A](input: ClassifiedInput)(a: => A): Either[InputError, A] =
+    try Right(a)
+    catch { case e: Exception => Left(InputError(input.display, String.valueOf(e.getMessage))) }
+
+  /** The input's source frame, all strings in its report's schema, tagged
+    * with the D1 input-order tiebreaker (SURVEY §7.4 risk 1): the file
+    * ordinal and a per-file row id reproduce pandas' stable keep-last
+    * across a batch.
+    */
+  private def rawInput(spark: SparkSession, input: ClassifiedInput, fileOrd: Int)
+      : Either[InputError, DataFrame] =
+    captured(input) {
       val base = input.sheet match {
-        case Some(si) => Xlsx.readClassified(spark, path, si, input.headerIdx, report.schema)
-        case None     => HeaderSniffer.readClassified(spark, path, input.headerIdx, report)
+        case Some(si) => Xlsx.readClassified(spark, input.path, si, input.headerIdx, input.report.schema)
+        case None     => HeaderSniffer.readClassified(spark, input.path, input.headerIdx, input.report)
       }
-      val raw = base
-        // D1 input-order tiebreaker (SURVEY §7.4 risk 1): file ordinal +
-        // per-file row id reproduce pandas' stable keep-last across a batch.
-        .withColumn("__file_ord", lit(fileOrd))
+      base.withColumn("__file_ord", lit(fileOrd))
         .withColumn("__row_ord", monotonically_increasing_id())
-      Right(report match {
-        case ReportType.TrainList      => TrainListReader(raw, trainHours, history)
-        case ReportType.Occupancy      => OccupancyReader(raw)
-        case ReportType.BookingPayment => BookingPaymentReader(raw)
-      })
-    } catch {
-      case e: Exception => Left(InputError(input.display, String.valueOf(e.getMessage)))
+    }
+
+  /** The report's reader over tagged raw rows (one input's, or a union). */
+  private def readReport(report: ReportType, raw: DataFrame,
+      trainHours: => DataFrame, history: => DataFrame): ReaderOutput =
+    report match {
+      case ReportType.TrainList      => TrainListReader(raw, trainHours, history)
+      case ReportType.Occupancy      => OccupancyReader(raw)
+      case ReportType.BookingPayment => BookingPaymentReader(raw)
     }
 
   val EmptyBatchMessage = "empty batch: no rows survived cleaning (P3 guard)"
@@ -164,59 +182,61 @@ object Pipeline {
     s"train numbers missing from departure times: ${numbers.mkString(", ")}"
   }
 
-  /** The report's consolidated frame over `inputs` (file ordinal → good
-    * rows), persisted and built by one `count`, with each input's P3 and J1
-    * verdict from that same job. An [[Observation]] on the union, below the
-    * window, collects the ordinals that hold a good row (P3: a missing one
-    * is an empty batch, reference `reports_exporter_v0.83.py:606-607`) and,
-    * for Train List, the ordinals with a row that matches
-    * [[TrainListReader.missingDeparture]] (J1, `:627-637`). Returns the pin
-    * and each failing ordinal's message, J1 before P3. A throw releases
-    * the pin.
+  /** The report's consolidated frame over `good`, the reader's rows of
+    * the inputs `ords`, persisted and built by one `count`, with each
+    * input's P3 and J1 verdict from that same job. An [[Observation]] on
+    * `good`, below the window, collects the ordinals that hold a good row
+    * (P3: a missing one is an empty batch, reference
+    * `reports_exporter_v0.83.py:606-607`) and, for Train List, the
+    * ordinals with a row that matches [[TrainListReader.missingDeparture]]
+    * (J1, `:627-637`). Returns the pin and each failing ordinal's message,
+    * J1 before P3. A throw releases the pin.
     */
-  private def pinChecked(report: ReportType, inputs: Seq[(Int, DataFrame)])
+  private def pinChecked(report: ReportType, ords: Seq[Int], good: DataFrame)
       : (DataFrame, Map[Int, String]) = {
     val seen = Observation()
     val ord = col("__file_ord")
     val j1 =
       if (report != ReportType.TrainList) Nil
       else Seq(collect_set(when(TrainListReader.missingDeparture, ord)).as("j1"))
-    val good = Consolidate.union(inputs.map(_._2))
-      .observe(seen, collect_set(ord).as("p3"), j1: _*)
+    val observed = good.observe(seen, collect_set(ord).as("p3"), j1: _*)
     val ordering = Consolidate.ordering(
       report.schema.sortKeys.filter(k => good.columns.contains(k)),
       Consolidate.SortMode.Lexicographic) ++ Seq(ord, col("__row_ord"))
-    val pin = Consolidate.numbered(Seq(good), report.schema.dedupKeys, ordering)
+    val pin = Consolidate.numbered(Seq(observed), report.schema.dedupKeys, ordering)
       .drop("__file_ord", "__row_ord")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       pin.count()
       // read only after the count returned; an entry may be absent when
-      // the union is empty
-      val observed = seen.get
-      def ords(name: String): Set[Int] =
-        observed.get(name).toSet.flatMap((s: Any) => s.asInstanceOf[scala.collection.Seq[Int]])
-      val (present, missing) = (ords("p3"), ords("j1"))
-      (pin, inputs.flatMap { case (o, g) =>
-        (if (missing(o)) Some(missingMessage(g))
+      // `good` is empty
+      val verdicts = seen.get
+      def seenOrds(name: String): Set[Int] =
+        verdicts.get(name).toSet.flatMap((s: Any) => s.asInstanceOf[scala.collection.Seq[Int]])
+      val (present, missing) = (seenOrds("p3"), seenOrds("j1"))
+      (pin, ords.flatMap { o =>
+        (if (missing(o)) Some(missingMessage(good.filter(ord === o)))
          else Option.when(!present(o))(EmptyBatchMessage)).map(o -> _)
       }.toMap)
     } catch { case e: Throwable => pin.unpersist(); throw e }
   }
 
   /** Full run over a directory of inputs (CSV files and xlsx workbooks).
-    * Readers carry the tiebreaker columns through to consolidation, where
+    * Each report's reader runs once, over the union of its passing inputs'
+    * raw rows, and carries the tiebreaker columns through to
+    * consolidation, where
     * the dedup window orders by (report sort keys, file ordinal, row
     * ordinal) — exact pandas stable-sort keep-last parity — and drops
     * them from the outputs.
     *
     * The P3 and J1 guards ride the action that builds each report's pin
     * ([[pinChecked]]), before any side channel is written. An input that
-    * fails one is its [[InputError]], and the pin is built again without
-    * it; only that rare path computes the window twice. A pin that throws
-    * (a strict parse of a malformed dimension value, say) is built again
-    * for each input alone: an input whose own pin throws or fails a guard
-    * is at fault, and the rest are pinned together.
+    * fails one is its [[InputError]], and the reader and the pin are built
+    * again without it; only that rare path computes the window twice. A
+    * reader or pin that throws (a strict parse of a malformed dimension
+    * value, say) is built again for each input alone: an input whose own
+    * pin throws or fails a guard is at fault, and the rest are pinned
+    * together.
     *
     * Every failure is a value (C3): a failed read or guard is its input's
     * [[InputError]]; a report whose later steps throw records
@@ -226,7 +246,7 @@ object Pipeline {
     * @param parallelism driver-pool width for all three fan-outs: the
     *   classify, the report types (each report's read → consolidate →
     *   side channels → load chain runs beside the others'), and each
-    *   report's per-input reads; 1 = the whole run is sequential, in
+    *   report's per-input source reads; 1 = the whole run is sequential, in
     *   report order, on the caller's thread.
     * @param load called once per report after its side channels, while
     *   the report's consolidated frame is still persisted, so a load of
@@ -252,38 +272,45 @@ object Pipeline {
       val mine = classified.filter(_.report == report)
       // The Train List reads use both dimensions: start both reads together,
       // inside this chain so that the other reports do not wait for them.
-      // One that fails throws again where a read uses it, which isolates
-      // that input.
+      // One that fails throws again in the report's reader, and then in
+      // each input's own, which records it against every input.
       if (report == ReportType.TrainList && mine.nonEmpty)
         try { DriverPool.traverse("dims", Seq(() => hours, () => hist), math.min(2, parallelism))(_()); () }
         catch { case _: Exception => () }
-      // per-(file, sheet) reads fan out on the driver pool: the xlsx
+      // per-(file, sheet) source reads fan out on the driver pool: the xlsx
       // parses are the serial cost for a workbook batch; order (and so the
       // D1 fileOrd tiebreaker and error attribution) is preserved by the pool.
-      val reads = DriverPool.traverse("read", mine.zipWithIndex, parallelism) {
-        case (ci, ord) => readInput(spark, ci, ord, hours, hist)
+      val raws = DriverPool.traverse("read", mine.zipWithIndex, parallelism) {
+        case (ci, ord) => rawInput(spark, ci, ord)
       }
-      val outs = reads.zipWithIndex.collect { case (Right(out), o) => o -> out }.toMap
+      val rawOf = raws.zipWithIndex.collect { case (Right(raw), o) => o -> raw }.toMap
       // each failed input's error, by file ordinal
-      val errors = mutable.Map(reads.zipWithIndex.collect { case (Left(e), o) => o -> e }: _*)
+      val errors = mutable.Map(raws.zipWithIndex.collect { case (Left(e), o) => o -> e }: _*)
       def fail(failed: Iterable[(Int, String)]): Unit =
         failed.foreach { case (o, m) => errors(o) = InputError(mine(o).display, m) }
+      // the report's reader, once, over the union of the inputs' raw rows;
+      // its pin, each failing input's message, and the reader's output
+      def pinRead(inputs: Seq[Int]): (DataFrame, Map[Int, String], ReaderOutput) = {
+        val out = readReport(report, Consolidate.union(inputs.map(rawOf)), hours, hist)
+        val (pin, failed) = pinChecked(report, inputs, out.good)
+        (pin, failed, out)
+      }
 
-      // the pin of the inputs that pass the guards, and those inputs
+      // the pin of the inputs that pass the guards, and their reader output
       @tailrec def pinPassing(inputs: Seq[Int], checkedAlone: Boolean)
-          : Option[(DataFrame, Seq[Int])] =
+          : Option[(DataFrame, ReaderOutput)] =
         if (inputs.isEmpty) None
-        else Try(pinChecked(report, inputs.map(o => o -> outs(o).good))) match {
-          case Success((pin, failed)) if failed.isEmpty => Some((pin, inputs))
-          case Success((pin, failed)) =>
+        else Try(pinRead(inputs)) match {
+          case Success((pin, failed, out)) if failed.isEmpty => Some((pin, out))
+          case Success((pin, failed, _)) =>
             pin.unpersist()
             fail(failed)
             pinPassing(inputs.filterNot(failed.contains), checkedAlone)
           case Failure(_: Exception) if !checkedAlone =>
             // pin each input alone: a throw, or a failed guard, is its error
             fail(inputs.zip(DriverPool.traverse("guard", inputs, parallelism)(o =>
-              Try(pinChecked(report, Seq(o -> outs(o).good))) match {
-                case Success((pin, failed)) => pin.unpersist(); failed.get(o)
+              Try(pinRead(Seq(o))) match {
+                case Success((pin, failed, _)) => pin.unpersist(); failed.get(o)
                 case Failure(e) => Some(String.valueOf(e.getMessage))
               })).collect { case (o, Some(m)) => o -> m })
             pinPassing(inputs.filterNot(errors.contains), checkedAlone = true)
@@ -292,14 +319,13 @@ object Pipeline {
 
       def outcome(r: Option[ReportResult]) =
         (r, mine.indices.flatMap(o => errors.get(o).map((mine(o), _))))
-      val ok = outs.keys.toSeq.sorted
+      val ok = rawOf.keys.toSeq.sorted
       try pinPassing(ok, checkedAlone = false) match {
         case None => outcome(None)
-        case Some((pin, passing)) =>
+        case Some((pin, out)) =>
           try {
             val (kept, dups) = KeepLastDedup.split(pin)
-            val rejects = Consolidate.union(passing.map(outs(_).rejects))
-              .drop("__file_ord", "__row_ord")
+            val rejects = out.rejects.drop("__file_ord", "__row_ord")
             val r = ReportResult(report, kept, dups, rejects, None)
             // K1-K3 side channels, then the caller's load
             val name = report.schema.name

@@ -86,7 +86,7 @@ object Relational {
     "q06_broadcast_lookup" -> ((s, dir) => {
       val li  = Tables.lineitem(s, dir)
       val dim = Tables.supplier(s, dir).select(col("s_suppkey").as("l_suppkey"), col("s_name"))
-      val (enriched, _) = Enrichment.broadcastLookup(li, dim, "l_suppkey", "s_name")
+      val enriched = Enrichment.broadcastLookup(li, dim, "l_suppkey")
       enriched.groupBy(col("s_name"))
         .agg(
           count(lit(1)).as("n"),

@@ -104,7 +104,7 @@ object TrainListReader {
     // J1 — tiny dimension, broadcast; missing keys are a hard error upstream.
     val dim = trainHours.select(
       col("train_number").as("Train Number"), col("departure_time"))
-    val (joined, _) = Enrichment.broadcastLookup(good0, dim, "Train Number", "departure_time")
+    val joined = Enrichment.broadcastLookup(good0, dim, "Train Number")
 
     val dep = col("Departure Date")
     val depShort = fmtDateShort(dep)

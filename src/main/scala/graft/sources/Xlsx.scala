@@ -87,8 +87,9 @@ object Xlsx {
     *
     * The venue follows the workbook's size: at or above
     * [[ExecutorParseBytes]] the sheet parses in an executor task, below
-    * it on the driver. Both give the same frame (XlsxSpec pins it), so
-    * the choice trades driver heap for a task dispatch, never semantics.
+    * it on the driver. Both give the same frame in one partition (XlsxSpec
+    * pins it), so the choice trades driver heap for a task dispatch, never
+    * semantics.
     */
   def readClassified(spark: SparkSession, path: String, sheetIndex: Int,
       headerIdx: Int, schema: ReportSchema): DataFrame =
@@ -120,12 +121,16 @@ object Xlsx {
     catch { case _: java.io.IOException => 0L }
   }
 
+  /** The driver venue: the parsed body as one slice. A sheet the driver
+    * parses is small, so more slices would only add tasks to every stage
+    * that reads it.
+    */
   private[graft] def readOnDriver(spark: SparkSession, path: String, sheetIndex: Int,
       headerIdx: Int, schema: ReportSchema): DataFrame = {
     val struct = schema.allStringStruct
     val body = bodyRows(readSheet(path, sheetIndex), headerIdx, struct.size).map(Row.fromSeq)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(body.toList), struct)
+      spark.sparkContext.parallelize(body.toList, 1), struct)
   }
 
   /** The executor venue: the workbook ships through a `binaryFile` scan

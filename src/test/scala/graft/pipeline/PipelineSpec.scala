@@ -20,15 +20,16 @@ class PipelineSpec extends SparkSuite {
   import spark.implicits._
 
   /** Most Spark jobs `Main.run` may issue on `writeMultiReportInputs`.
-    * Measured: 33 in every run, since the P3 and J1 guards ride the count
-    * that builds each report's pin and the reads run no job. It was 39
-    * while each input ran its own guard jobs, 48 or 49 while each load
-    * also ran a day-streak query beside its write (adaptive execution
-    * planned that in 3 or 4 jobs, depending on which of the two built the
-    * load's cached input first), and 69 when every sink re-ran the readers
-    * and the window.
+    * Measured: 29 in every run, since each report's reader runs once over
+    * the union of its inputs (one broadcast of each dimension and one J2
+    * semi-join per report). It was 33 while each input had its own reader
+    * chain, 39 while each input ran its own guard jobs, 48 or 49 while
+    * each load also ran a day-streak query beside its write (adaptive
+    * execution planned that in 3 or 4 jobs, depending on which of the two
+    * built the load's cached input first), and 69 when every sink re-ran
+    * the readers and the window.
     */
-  private val MainRunJobs = 33
+  private val MainRunJobs = 29
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(name)
@@ -373,12 +374,18 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("J1: a dimension key with a NULL probe value counts as missing (reference null-check parity)") {
-    import graft.enrich.Enrichment
-    val fact = Seq(("T1", 1), ("T2", 2), ("T3", 3)).toDF("k", "v")
-    val dim = Seq(("T1", "09:00:00"), ("T2", null)).toDF("k", "hour")
-    val (_, missing) = Enrichment.broadcastLookup(fact, dim, "k", "hour")
+    val raw0 = Seq("T1", "T2", "T3").map(t => ("2024-01-01 10:00:00", t, "AB", "tk1"))
+      .toDF("Departure Date", "Train Number", "OD", "Ticket Number")
+    val raw = Schemas.trainList.header.foldLeft(raw0) { (df, c) =>
+      if (df.columns.contains(c)) df else df.withColumn(c, lit("1"))
+    }
+    val hours = Seq(("T1", "09:00:00"), ("T2", null)).toDF("train_number", "departure_time")
+    val (_, hist) = tlDims()
+    val good = TrainListReader(raw, hours, hist).good
     // T2 exists but carries a null hour; T3 is absent — both missing
-    assert(missing.as[String].collect().toSet === Set("T2", "T3"))
+    assert(good.filter(TrainListReader.missingDeparture).select("train_number")
+      .as[String].collect().toSet === Set("T2", "T3"))
+    assert(good.count() === 3)
   }
 
   test("TL reader: missing train numbers surfaced for abort") {
@@ -534,6 +541,36 @@ class PipelineSpec extends SparkSuite {
     assert(counts.jobsLabelled("graft:report") > 0, counts)
   }
 
+  /** Scans of the file or directory named `name` in the optimized plan. */
+  private def scansOf(df: org.apache.spark.sql.DataFrame, name: String): Int =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.count {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.rootPaths.exists(_.getName == name)
+      case _ => false
+    }
+
+  test("Pipeline.run: a report's reader runs once over the union, so each dimension is scanned once") {
+    val in = tmpDir("graft-union-in")
+    for (i <- 1 to 3)
+      Files.writeString(Paths.get(s"$in/tl_$i.csv"), tlCsv(Seq(
+        tlRow(s"2024-01-0$i 10:00:00", "T1", "tk1"), tlRow(s"2024-01-0$i 11:00:00", "T1", "tk2"))))
+    val dims = tmpDir("graft-union-dims")
+    val (hoursDf, histDf) = tlDims()
+    hoursDf.write.option("header", "true").csv(s"$dims/train_hours.csv")
+    histDf.write.parquet(s"$dims/history.parquet")
+    val res = Pipeline.run(spark, in, tmpDir("graft-union-out"), "20240101T000000",
+      spark.read.option("header", "true").csv(s"$dims/train_hours.csv"),
+      spark.read.parquet(s"$dims/history.parquet"))
+    assert(res.errors.isEmpty && res.done.size === 3)
+    // a new Dataset: the plan of the recomputed frame, not of the released pin
+    val kept = res.results.find(_.report == ReportType.TrainList).get.kept.select("*")
+    assert(kept.count() === 2) // tk1 and tk2, each kept from the last input
+    assert(scansOf(kept, "history.parquet") === 1, kept.queryExecution.optimizedPlan)
+    assert(scansOf(kept, "train_hours.csv") === 1, kept.queryExecution.optimizedPlan)
+  }
+
   /** The decompressed bytes of one side-channel artifact, part by part. */
   private def artifactBytes(exportDir: String, report: String, channel: String): Seq[Byte] =
     new java.io.File(graft.sinks.SideChannelCsv.artifactPath(exportDir, report, channel,
@@ -578,7 +615,7 @@ class PipelineSpec extends SparkSuite {
   test("P3 on the pin: a report whose every input holds no row records each input, and writes nothing") {
     val in = tmpDir("graft-p3-none-in")
     val out = tmpDir("graft-p3-none-out")
-    // a header-only sheet reads as a local frame with no partition at all
+    // a header-only sheet reads as a frame with no row
     writeStrXlsx(s"$in/book.xlsx", Seq(Schemas.occupancy.header))
     Files.writeString(Paths.get(s"$in/a.csv"), occCsv(Seq(
       occRow("", "AB", "T1", "C1", "5", "q")), junkRows = 0))

@@ -182,6 +182,7 @@ class XlsxSpec extends SparkSuite {
       val onExecutor = Xlsx.readOnExecutor(spark, path, sheet, headerIdx, schema)
       assert(onExecutor.schema === onDriver.schema)
       assert(onExecutor.rdd.getNumPartitions === 1, "one workbook, one task")
+      assert(onDriver.rdd.getNumPartitions === 1, "one parsed sheet, one slice")
       val rows = onDriver.collect().toSeq
       assert(rows.size === bodyRows)
       assert(onExecutor.collect().toSeq === rows)
