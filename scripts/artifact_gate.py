@@ -16,7 +16,9 @@ Checks:
      the bench line, an empty failures map.
   3. Optionally (--local-bench <path>): a bare bench JSON written via
      SPARK_GRAFT_BENCH_OUT must parse, have empty failures, and cover
-     every query name.
+     every query name; its queries_counts must hold an entry for every
+     timed query, each with integer jobs, stages and tasks of 0 or more
+     and numeric input_mb and shuffle_write_mb.
 
 Usage: artifact_gate.py [N] [--local-bench PATH]
   N defaults to the highest round with a CORRECTNESS_r*.json present.
@@ -36,6 +38,21 @@ def expected_queries():
         with open(path, encoding="utf-8") as f:
             names.update(re.findall(r'"(q\d+_[a-z0-9_]+)"\s*->', f.read()))
     return names
+
+
+def count_problems(entry):
+    """What is wrong with one queries_counts entry, or None."""
+    if not isinstance(entry, dict):
+        return "is not an object"
+    for k in ("jobs", "stages", "tasks"):
+        v = entry.get(k)
+        if not isinstance(v, int) or isinstance(v, bool) or v < 0:
+            return f"{k}={v!r} is not an integer of 0 or more"
+    for k in ("input_mb", "shuffle_write_mb"):
+        v = entry.get(k)
+        if not isinstance(v, (int, float)) or isinstance(v, bool):
+            return f"{k}={v!r} is not a number"
+    return None
 
 
 def latest_round():
@@ -107,6 +124,19 @@ def main():
             if missing:
                 problems.append(
                     f"local bench: {len(missing)} queries untimed: {', '.join(missing)}")
+            counts = lb.get("queries_counts")
+            if not isinstance(counts, dict):
+                problems.append("local bench: no queries_counts object")
+            else:
+                uncounted = sorted(set(lb.get("queries", {})) - set(counts))
+                if uncounted:
+                    problems.append(
+                        f"local bench: {len(uncounted)} timed queries have no counts: "
+                        f"{', '.join(uncounted)}")
+                for name, entry in sorted(counts.items()):
+                    bad = count_problems(entry)
+                    if bad:
+                        problems.append(f"local bench: queries_counts[{name}] {bad}")
             if lb.get("contended") is True:
                 print(f"WARN: local bench contended=true "
                       f"(timings suspect; retimed set: {sorted(lb.get('queries_retimed', {}))})")

@@ -2,7 +2,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Methodology (VERDICT r1 item 9, hardened r5):
+  * prints one JSON line. `runMain graft.Bench --explain [names…]` instead
+  * prints `explain("formatted")` for the named queries (all of them when
+  * none are named) and times nothing: the per-operator plan audit
+  * (shuffles, pushed filters, read schemas, codegen spans). The session
+  * is `GraftSession.builder`'s; SPARK_GRAFT_SHUFFLE_PARTITIONS overrides
+  * its shuffle partition count for the scale legs. Methodology (VERDICT
+  * r1 item 9, hardened r5):
   *  - a per-query warmup pass immediately before its timed runs, so
   *    JVM/codegen warmup isn't billed to the measurement;
   *  - the timed action is a `noop`-format write, which materializes every
@@ -17,6 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    is contention-suspect even when every calibration checkpoint
   *    around it read clean (observed in r7: a burst fit entirely inside
   *    one query's three passes between two flat checkpoints);
+  *  - every timed pass is counted by [[SparkCounts]]: the Spark jobs,
+  *    stages and tasks it ran and the MB it read and shuffle-wrote. The
+  *    counts of the pass whose time the median reports go to
+  *    `queries_counts`, so a slower query with unchanged counts reads as
+  *    sitting noise and a changed count shows the work that moved. The
+  *    clock runs inside the counted block; the listener-bus drains that
+  *    make the counts exact stay outside the timed region;
   *  - failures are never swallowed: a throwing query is reported in a
   *    `failures` map, its timing omitted, and the process exits nonzero —
   *    a broken query previously recorded a tiny wall time and read as a
@@ -60,7 +73,55 @@ object Bench {
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+  /** One query's timing: the median and min of its timed passes, and the
+    * Spark work of the pass the median reports.
+    */
+  private final case class Timed(median: Double, min: Double, counts: SparkCounts)
+
+  /** Times `query` (built afresh for every pass): a warm-up pass
+    * immediately before the timed ones (a single global warm-up lets the
+    * codegen cache evict earlier plans while later ones warm, re-billing
+    * Janino compilation to the timed pass), then `passes` counted, timed
+    * passes. The query's pins are dropped afterwards, never between its
+    * own passes, which share them by design: accumulated pins slow every
+    * later query's cache lookup, compete with execution memory, and let a
+    * later query read an earlier one's cached subtree instead of
+    * computing it.
+    */
+  private def time(spark: SparkSession, passes: Int)(query: => DataFrame): Timed = {
+    run(query)
+    val samples = (1 to passes).map { _ =>
+      SparkCounts.of(spark) {
+        val t0 = System.nanoTime()
+        run(query)
+        (System.nanoTime() - t0) / 1e9
+      }
+    }.sortBy(_._1)
+    val (median, counts) = samples(samples.size / 2)
+    spark.catalog.clearCache()
+    Timed(median, samples.head._1, counts)
+  }
+
+  private def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A JSON object of already-rendered values, in `kvs` order. */
+  private def jobj(kvs: Iterable[(String, Any)]): String =
+    kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** The `queries_counts` object (pure — unit-tested in BenchSpec): one
+    * entry per query in `names` order that has counts; a failed query has
+    * none.
+    */
+  private[graft] def countsJson(names: Seq[String], counts: Map[String, SparkCounts]): String =
+    jobj(names.flatMap(n => counts.get(n).map { c =>
+      n -> (s"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},""" +
+        s""""input_mb":${c.inputBytes / 1e6},"shuffle_write_mb":${c.shuffleWriteBytes / 1e6}}""")
+    }))
 
   /** Contention-suspect selection for the self-remediation pass (pure —
     * unit-tested in BenchSpec). A query is suspect when
@@ -99,42 +160,43 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.defaultCpus
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides the cpus default — the
-    // scale-ladder knob: 32 reducers over a 100×-data leg concentrate
-    // ~20M rows of agg hash state per task (spill regime, measured in
-    // SCALE.md round 20); a real cluster's reducer count scales with
-    // executors, so the big legs set this to what AQE would coalesce
-    // FROM, not the local core count.
-    val shufflePartitions: String = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(_.trim.toIntOption).filter(_ >= 1).map(_.toString)
-      .getOrElse(cpus.toString)
-    // AQE partition coalescing knob (A/B'd in round 21):
-    // `parallelismFirst=false` makes AQE honor
-    // advisoryPartitionSizeInBytes instead of refusing to coalesce
-    // below the core count. Measured on a 20-query slice at sf0.1:
-    // iterative/graph gates improve (q109 −72%, q120 −32%) but the
-    // CPU-bound per-row chains serialize onto too few tasks and lose
-    // far more (q24 +390%, q43 +275%, q147 +165%, q23 +52%) — total
-    // +20%. Default stays TRUE (Spark's default); the env knob exists
-    // for scale-ladder legs, where reduce partitions should be sized
-    // by bytes, not cores (target/r21/bench_pf_{true,false}.json).
-    val parallelismFirst: String = sys.env.get("SPARK_GRAFT_PARALLELISM_FIRST")
-      .map(_.trim).filter(v => v == "true" || v == "false")
-      .getOrElse("true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The engine's session. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides the
+    * cpus default — the scale-ladder knob: 32 reducers over a 100×-data
+    * leg concentrate ~20M rows of agg hash state per task (spill regime,
+    * measured in SCALE.md round 20); a real cluster's reducer count scales
+    * with executors, so the big legs set this to what AQE would coalesce
+    * FROM, not the local core count.
+    */
+  private def session(): SparkSession = {
+    val builder = GraftSession.builder("graft-bench")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").flatMap(_.trim.toIntOption).filter(_ >= 1)
+      .foreach(n => builder.config("spark.sql.shuffle.partitions", n.toString))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => bench()
+    case "--explain" :: names => explain(names)
+    case other => sys.error(
+      s"unknown arguments: ${other.mkString(" ")}; usage: graft.Bench [--explain [names…]]")
+  }
+
+  private def explain(only: Seq[String]): Unit = {
+    val spark = session()
+    val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { n =>
+      println(s"\n========== $n ==========")
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    }
+    spark.stop()
+  }
+
+  private def bench(): Unit = {
+    val spark = session()
     // Optional subset (comma-separated names) for scale-curve runs and
     // single-query iteration; default remains the full suite.
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -147,8 +209,6 @@ object Bench {
     // empty sample list or kill the run before any query executes.
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap(_.trim.toIntOption).getOrElse(3))
-    val clearBetweenQueries =
-      !sys.env.get("SPARK_GRAFT_CLEAR_CACHE").exists(_.trim == "0")
 
     // Calibration checkpoints: MIN of three timed probe passes. Min, not
     // median: the probe estimates the machine's steady-state cost of a
@@ -176,39 +236,19 @@ object Bench {
 
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val minTimings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, SparkCounts]
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // probes.size when each query started = the index of the first probe
     // appended AFTER it finishes (checkpoints only run between queries),
     // and index-1 is the last probe before it — its contention bracket.
     val probeAt = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     names.zipWithIndex.foreach { case (name, i) =>
-      // Per-query warmup immediately before its timed runs: a single global
-      // warmup pass lets the codegen cache evict earlier plans while later
-      // ones warm, re-billing Janino compilation (data-size-independent)
-      // to the timed pass.
       try {
         probeAt(name) = probes.size
-        run(SparkEntry.queries(name)(spark, sfDir))
-        val samples = (1 to passes).map { _ =>
-          val t0 = System.nanoTime()
-          run(SparkEntry.queries(name)(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }
-        timings(name) = median(samples)
-        minTimings(name) = samples.min
-        // Drop this query's pinned intermediates BEFORE the next query
-        // (never between a query's own warmup/timed passes, which share
-        // pins by design). Without this the CacheManager accumulates
-        // every gate's one-shot pins for the whole 197-query session:
-        // each later query's planning scans the whole entry list for
-        // cache-candidate subtrees, the blocks compete with execution
-        // memory, and a query whose pinned subtree happens to match an
-        // EARLIER query's still-cached plan reads that cache instead of
-        // computing — position-dependent numbers. Results are unaffected
-        // (pins are pure intermediates); each query still computes from
-        // the parquet inputs every pass. SPARK_GRAFT_CLEAR_CACHE=0
-        // restores the accumulate-forever behavior for A/B runs.
-        if (clearBetweenQueries) spark.catalog.clearCache()
+        val t = time(spark, passes)(SparkEntry.queries(name)(spark, sfDir))
+        timings(name) = t.median
+        minTimings(name) = t.min
+        counts(name) = t.counts
       } catch {
         case e: Throwable =>
           val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
@@ -244,13 +284,7 @@ object Bench {
         s"[bench] re-timing ${suspects.size} contention-suspect queries: ${suspects.mkString(", ")}")
       suspects.foreach { name =>
         try {
-          run(SparkEntry.queries(name)(spark, sfDir))
-          retimed(name) = median((1 to passes).map { _ =>
-            val t0 = System.nanoTime()
-            run(SparkEntry.queries(name)(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
-          })
-          if (clearBetweenQueries) spark.catalog.clearCache()
+          retimed(name) = time(spark, passes)(SparkEntry.queries(name)(spark, sfDir)).median
         } catch {
           // a query that passed the main pass but fails during retime is
           // a real signal — record it, so a consumer can tell "not
@@ -302,22 +336,12 @@ object Bench {
           qe.toRdd.foreach(_ => ())
           (System.nanoTime() - t0) / 1e9
         }.min
-        if (clearBetweenQueries) spark.catalog.clearCache()
+        spark.catalog.clearCache()
       } catch { case _: Throwable => () } // warm numbers are advisory
     }
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = timings.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val qmins = minTimings.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val qwarm = warmTimings.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val fs = failures.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    val rts = retimed.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val rtf = retimeFailures.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val fs = jobj(failures.view.mapValues(jstr))
+    val rtf = jobj(retimeFailures.view.mapValues(jstr))
     val total = timings.values.sum
     val totalRetimed = timings.map { case (k, v) => retimed.getOrElse(k, v) }.sum
     // total_retimed falls back to the contention-suspect original timing
@@ -341,7 +365,7 @@ object Bench {
             "(>2.5x); artifact timings are contention-suspect — prefer queries_retimed")
       s""","calibration":[${probes.mkString(",")}],"contended":$contended"""
     }
-    val artifact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmins,"queries_warm":$qwarm,"queries_retimed":$rts,"retime_failures":$rtf,"total_retimed":$totalRetimed,"total_retimed_complete":$totalRetimedComplete,"failures":$fs$calJson,"sf":"$sfDir"}"""
+    val artifact = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jobj(timings)},"queries_min":${jobj(minTimings)},"queries_warm":${jobj(warmTimings)},"queries_counts":${countsJson(names, counts.toMap)},"queries_retimed":${jobj(retimed)},"retime_failures":$rtf,"total_retimed":$totalRetimed,"total_retimed_complete":$totalRetimedComplete,"failures":$fs$calJson,"sf":"$sfDir"}"""
     println(artifact)
     // ALSO write the artifact straight to a file: stdout passes through
     // sbt, which prefixes the line with "[info] " — every round's driver

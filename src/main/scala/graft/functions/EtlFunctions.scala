@@ -74,13 +74,6 @@ object EtlFunctions {
       composed - expr("INTERVAL 1 DAY")).otherwise(composed)
   }
 
-  /** F10 `:667-671` — the rollover-adjusted departure *date* (the reference's
-    * `train_departure_date_short`): ticket date minus the same adjustment.
-    */
-  def rolloverDate(ticketTs: Column, scheduledTs: Column): Column =
-    when(date_format(scheduledTs, "HH:mm:ss") > date_format(ticketTs, "HH:mm:ss"),
-      date_sub(to_date(ticketTs), 1)).otherwise(to_date(ticketTs))
-
   /** F11 `:673-679` — service-date cutoff: departures at or before 05:00:00
     * belong to the previous service date (maintenance-window rule). Full
     * time-of-day compare including seconds (the reference compares

@@ -837,11 +837,6 @@ object Dedup {
       .withColumn(outCol, simhash16FromHashes(col("__hs")))
       .drop("__hs")
 
-  /** Hamming distance between two SimHash values (near-dup test:
-    * distance ≤ t). bit_count is a single codegen'd instruction.
-    */
-  def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Corpus-level repeated-line removal (the RefinedWeb/CCNet boilerplate
     * filter): any line occurring in more than `maxDocs` DISTINCT
     * documents is dropped from EVERY document — navigation chrome,

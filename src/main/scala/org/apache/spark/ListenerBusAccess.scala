@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Test access to the package-private listener bus. */
+/** Access to the package-private listener bus. */
 object ListenerBusAccess {
 
   /** Blocks until every posted listener event has been delivered. */

@@ -74,4 +74,15 @@ class BenchSpec extends AnyFunSuite {
       Map("qgone" -> 0, "qok" -> 0), IndexedSeq.empty)
     assert(s == Seq("qok"))
   }
+
+  test("queries_counts: one entry per counted query in name order; a failed query has none") {
+    val c = SparkCounts(jobs = 3, stages = 5, tasks = 12, inputBytes = 2500000L,
+      shuffleWriteBytes = 125000L, jobsByLabel = Map("graft:x" -> 1))
+    val json = Bench.countsJson(Seq("qb", "qfail", "qa\"x"),
+      Map("qa\"x" -> c.copy(inputBytes = 0L, shuffleWriteBytes = 0L), "qb" -> c))
+    assert(json ===
+      """{"qb":{"jobs":3,"stages":5,"tasks":12,"input_mb":2.5,"shuffle_write_mb":0.125},""" +
+      """"qa\"x":{"jobs":3,"stages":5,"tasks":12,"input_mb":0.0,"shuffle_write_mb":0.0}}""")
+    assert(Bench.countsJson(Seq("qfail"), Map.empty) === "{}")
+  }
 }

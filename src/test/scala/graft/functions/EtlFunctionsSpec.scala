@@ -22,11 +22,6 @@ class EtlFunctionsSpec extends SparkSuite {
     assert(out === Seq("2024-01-02 09:00:00", "2024-01-01 11:00:00", "2024-01-02 10:00:00"))
   }
 
-  test("F10: rolloverDate shifts the date component only") {
-    val rows = Seq((ts("2024-01-02 00:30:00"), ts("2024-01-02 23:50:00")))
-    assert(one(rolloverDate(col("t"), col("s")), rows) === Seq("2024-01-01"))
-  }
-
   test("F11: service date boundary — 05:00:00 shifts, 05:00:01 does not") {
     val rows = Seq(
       (ts("2024-03-10 05:00:00"), ts("2024-03-10 05:00:00")),
