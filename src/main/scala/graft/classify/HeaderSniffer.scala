@@ -1,7 +1,14 @@
 package graft.classify
 
+import java.io.IOException
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.functions.monotonically_increasing_id
 
 import graft.schema.ReportType
 
@@ -14,10 +21,10 @@ import graft.schema.ReportType
   * with interior blank cells shift (SURVEY.md §7.4 risk 7) — replicated
   * exactly.
   *
-  * Classification is a driver-side decision over ≤50 rows (the reference's
-  * own bound) — this is control-plane work, not a distributed operator, so
-  * the sniff read carries an explicit `limit(50)` and only that sliver is
-  * ever collected.
+  * Classification is a driver-side decision over ≤50 records (the
+  * reference's own bound), as for a workbook: no Spark job. A CSV record is
+  * what Spark's CSV reader parses without `multiLine`: a line holding more
+  * than whitespace, parsed by the univocity parser Spark's options build.
   */
 object HeaderSniffer {
 
@@ -33,46 +40,42 @@ object HeaderSniffer {
       ReportType.all.find(_.schema.header == cells).map(t => (idx, t))
     }.nextOption()
 
-  /** S3 — sniff the first 50 rows of a headerless CSV file. The read is
-    * schema-pinned to the widest report (so no inference pass) and limited
-    * before collect.
-    */
+  /** S3 — every cell (empty is null) of a CSV file's first 50 records. */
   def sniffCsv(spark: SparkSession, path: String): Seq[Seq[String]] = {
-    val width = ReportType.all.map(_.schema.columns.length).max
-    val schema = StructType((0 until width).map(i => StructField(s"_c$i", StringType)))
-    spark.read.schema(schema).option("header", "false").csv(path)
-      .limit(SniffRows)
-      .collect()
-      .toIndexedSeq
-      .map(r => (0 until width).map(i => if (r.isNullAt(i)) null else r.getString(i)))
+    val parser = new CsvParser(new CSVOptions(Map.empty[String, String], false, "UTC").asParserSettings)
+    records(spark, path, SniffRows).map(r => parser.parseLine(r._1).toSeq)
   }
 
-  /** S3+S4 over a file: sniff then classify. */
+  /** S3+S4 over a file: sniff then classify; an unreadable file is unclassified. */
   def classifyCsv(spark: SparkSession, path: String): Option[(Int, ReportType)] =
-    classify(sniffCsv(spark, path))
+    try classify(sniffCsv(spark, path)) catch { case _: IOException => None }
 
-  /** S5 — full typed all-string read of a classified CSV: skip everything
-    * at or above the header row, then parse with the report's all-string
-    * schema. `headerIdx` is the 0-based row index the classifier returned
-    * (the reference reads with `skiprows = first_row - 1, header = 0`).
-    *
-    * Header at row 0 is the fast path: a plain schema-pinned csv scan
-    * (splittable, no extra pass). An offset header needs a line-index
-    * filter, which is done distributed via `zipWithIndex` — never a
-    * driver-side collect of data rows.
+  /** S5 — the all-string records below header record `headerIdx` (the
+    * reference's `skiprows`), from one CSV scan. Partition 0 starts with the
+    * split at byte 0, so its `monotonically_increasing_id`s count records
+    * from 0, and later partitions' ids exceed any header index. A header
+    * that ends past the smallest split Spark makes, the lesser of
+    * `spark.sql.files.maxPartitionBytes` and `.openCostInBytes`, throws.
     */
   def readClassified(spark: SparkSession, path: String, headerIdx: Int,
       report: ReportType): DataFrame = {
-    val struct = report.schema.allStringStruct
-    if (headerIdx == 0)
-      spark.read.schema(struct).option("header", "true").csv(path)
-    else {
-      // headerIdx counts CSV records, and the CSV reader skips blank lines:
-      // drop them by its rule before numbering the lines.
-      val body = spark.sparkContext.textFile(path).filter(_.trim.nonEmpty).zipWithIndex()
-        .collect { case (line, i) if i > headerIdx => line }
-      val ds = spark.createDataset(body)(org.apache.spark.sql.Encoders.STRING)
-      spark.read.schema(struct).option("header", "false").csv(ds)
-    }
+    val conf = spark.sessionState.conf
+    val minSplit = math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+    require(!records(spark, path, headerIdx + 1).lift(headerIdx).exists(_._2 > minSplit),
+      s"header record $headerIdx of $path ends past byte $minSplit, the smallest file split")
+    spark.read.schema(report.schema.allStringStruct).option("header", "false").csv(path)
+      .filter(monotonically_increasing_id() > headerIdx)
+  }
+
+  /** The file's first `n` records and the byte offset past each, split by
+    * Hadoop's line reader as Spark's CSV scan splits them (a leading BOM skipped). */
+  private def records(spark: SparkSession, path: String, n: Int): Seq[(String, Long)] = {
+    val p = new Path(path)
+    val in = new LineReader(p.getFileSystem(spark.sessionState.newHadoopConf()).open(p))
+    try Iterator.continually { val t = new Text; (in.readLine(t), t) }.takeWhile(_._1 > 0)
+      .scanLeft(("", 0L)) { case ((_, end), (len, t)) =>
+        (if (end == 0) t.toString.stripPrefix("\uFEFF") else t.toString, end + len) }
+      .filter(_._1.trim.nonEmpty).take(n).toIndexedSeq
+    finally in.close()
   }
 }

@@ -31,8 +31,8 @@ import graft.sources.Xlsx
   * clean → enrich chain, one set of dimension broadcasts and one J2
   * semi-join, however many inputs it has.
   *
-  * Scale notes: classification collects ≤50 rows per file (the reference's
-  * own bound); everything else executes distributed. The reads only build
+  * Scale notes: classification parses ≤50 records per file on the driver
+  * (the reference's bound); all else executes distributed. The reads only build
   * plans. Each report type's read → keep-last window is computed ONCE, by
   * the count that persists the row-numbered frame and observes every
   * input's P3 and J1 guards on the way; the duplicates and snapshot
@@ -104,9 +104,9 @@ object Pipeline {
     (all.collect { case Right(c) => c }, all.collect { case Left(p) => p })
   }
 
-  /** Each listed file with its units. A workbook that cannot be opened, or
-    * lists no sheets, is unclassified as `path`; a sheet that cannot be
-    * parsed or matches no header as `path#sheet<i>`.
+  /** Each listed file with its units. A file that cannot be read, a CSV that
+    * matches no header or a workbook that lists no sheets is unclassified as
+    * `path`; a sheet that cannot be parsed or matches no header as `path#sheet<i>`.
     */
   private def classifyFiles(spark: SparkSession, inputDir: String, parallelism: Int)
       : Seq[(String, Seq[Either[String, ClassifiedInput]])] = {

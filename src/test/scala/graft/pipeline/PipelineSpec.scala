@@ -20,16 +20,17 @@ class PipelineSpec extends SparkSuite {
   import spark.implicits._
 
   /** Most Spark jobs `Main.run` may issue on `writeMultiReportInputs`.
-    * Measured: 29 in every run, since each report's reader runs once over
-    * the union of its inputs (one broadcast of each dimension and one J2
-    * semi-join per report). It was 33 while each input had its own reader
+    * Measured: 25, since a CSV is sniffed on the driver. It was 29 while
+    * each of the four CSVs ran a sniff job (each report's reader already
+    * ran once over the union of its inputs: one broadcast of each dimension
+    * and one J2 semi-join per report), 33 while each input had its own reader
     * chain, 39 while each input ran its own guard jobs, 48 or 49 while
     * each load also ran a day-streak query beside its write (adaptive
     * execution planned that in 3 or 4 jobs, depending on which of the two
     * built the load's cached input first), and 69 when every sink re-ran
     * the readers and the window.
     */
-  private val MainRunJobs = 29
+  private val MainRunJobs = 25
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(name)
@@ -137,6 +138,111 @@ class PipelineSpec extends SparkSuite {
     val out = OccupancyReader(HeaderSniffer.readClassified(spark, blank, 1, ReportType.Occupancy))
     assert(out.good.count() === 2)
     assert(out.rejects.isEmpty)
+  }
+
+  /** Reference sniff: the first 50 records through a Spark CSV read pinned
+    * to the widest report's all-string schema. The driver sniff must see
+    * the same non-empty cells in every record of no more cells than that.
+    */
+  private def sparkSniff(path: String): Seq[Seq[String]] = {
+    val width = ReportType.all.map(_.schema.columns.length).max
+    val schema = org.apache.spark.sql.types.StructType((0 until width).map(i =>
+      org.apache.spark.sql.types.StructField(s"_c$i", org.apache.spark.sql.types.StringType)))
+    spark.read.schema(schema).option("header", "false").csv(path)
+      .limit(HeaderSniffer.SniffRows).collect().toIndexedSeq
+      .map(r => (0 until width).map(i => if (r.isNullAt(i)) null else r.getString(i)))
+  }
+
+  /** Reference offset-header read: number the file's non-blank lines with
+    * `zipWithIndex` and parse the lines below the header as a CSV dataset.
+    */
+  private def lineIndexedRead(path: String, headerIdx: Int, report: ReportType) = {
+    val body = spark.sparkContext.textFile(path).filter(_.trim.nonEmpty).zipWithIndex()
+      .collect { case (line, i) if i > headerIdx => line }
+    spark.read.schema(report.schema.allStringStruct).option("header", "false")
+      .csv(spark.createDataset(body)(org.apache.spark.sql.Encoders.STRING))
+  }
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("S3 property: the driver sniff sees the Spark CSV reader's non-empty cells on hostile CSVs") {
+    import org.scalacheck.Gen
+    val width = ReportType.all.map(_.schema.columns.length).max
+    val text = Gen.listOfN(4, Gen.oneOf('a', 'Z', '7', ' ', ',', '"', ';', '\t')).map(_.mkString)
+    val cell = Gen.oneOf(
+      Gen.alphaNumStr.map(_.take(6)),
+      Gen.const(""), Gen.const("  "),
+      text.map(s => "\"" + s.replace("\"", "\"\"") + "\""), // quoted, quotes doubled
+      text.map(s => s"""\"$s\n$s\""""),                      // a quoted newline splits the record
+      text.map(s => s"""$s"x"""), Gen.const("\"open"), Gen.const("\"\""))
+    val record = Gen.choose(1, width).flatMap(n => Gen.listOfN(n, cell)).map(_.mkString(","))
+    val line = Gen.frequency(6 -> record, 1 -> Gen.oneOf("", " ", "\t", "  \t "),
+      1 -> Gen.oneOf(ReportType.all).map(_.schema.header.mkString(",")))
+    val file = for {
+      n <- Gen.choose(1, 60)
+      lines <- Gen.listOfN(n, line)
+      sep <- Gen.oneOf("\n", "\r\n", "\r")
+      bom <- Gen.oneOf("", "\uFEFF")
+    } yield bom + lines.mkString(sep)
+    val files = Gen.listOfN(40, file).apply(Gen.Parameters.default,
+      org.scalacheck.rng.Seed(20L)).get
+    val dir = tmpDir("graft-sniff-prop")
+    def nonEmpty(rows: Seq[Seq[String]]) = rows.map(_.filter(c => c != null && c.nonEmpty))
+    files.zipWithIndex.foreach { case (content, i) =>
+      val path = s"$dir/f$i.csv"
+      Files.writeString(Paths.get(path), content)
+      val reference = sparkSniff(path)
+      assert(nonEmpty(HeaderSniffer.sniffCsv(spark, path)) === nonEmpty(reference),
+        s"file $i: ${content.take(300)}")
+      assert(HeaderSniffer.classifyCsv(spark, path) === HeaderSniffer.classify(reference))
+    }
+  }
+
+  test("S5: an offset header read as many file splits equals the line-indexed read") {
+    val dir = tmpDir("graft-splits")
+    val path = s"$dir/occ.csv"
+    val junk = Seq("junk0,\"open quote", "spans,a line\"", "", "   ", "junk1,x")
+    val rows = (0 until 3000).map(i =>
+      occRow(f"2024-01-${i % 28 + 1}%02d 00:00:00", s"S$i", s"T${i % 97}", "C1", s"$i", "q"))
+    Files.writeString(Paths.get(path),
+      (junk ++ Seq(Schemas.occupancy.header.mkString(",")) ++ rows).mkString("\n"))
+    assert(HeaderSniffer.classifyCsv(spark, path) === Some((3, ReportType.Occupancy)))
+    withConf("spark.sql.files.maxPartitionBytes", "8192") {
+      val df = HeaderSniffer.readClassified(spark, path, 3, ReportType.Occupancy)
+      assert(df.rdd.getNumPartitions > 10)
+      val got = df.collect().toSeq
+      assert(got.size === 3000)
+      assert(got === lineIndexedRead(path, 3, ReportType.Occupancy).collect().toSeq)
+    }
+  }
+
+  test("S5: a header past the smallest file split is its input's error; the other inputs still load") {
+    val in = tmpDir("graft-deep-in")
+    val deep = s"$in/a_deep.csv"
+    // 40 junk records of 40 bytes: the header is sniffed, and ends past 1024 bytes
+    Files.writeString(Paths.get(deep), ((0 until 40).map(i => f"junk$i%02d," + "x" * 33) ++ Seq(
+      Schemas.occupancy.header.mkString(","),
+      occRow("2024-01-01 00:00:00", "AB", "T1", "C1", "5", "q1"))).mkString("\n"))
+    Files.writeString(Paths.get(s"$in/b_ok.csv"), occCsv(Seq(
+      occRow("2024-01-02 00:00:00", "CD", "T2", "C2", "6", "q2")), junkRows = 1))
+    val res = withConf("spark.sql.files.maxPartitionBytes", "1024") {
+      Pipeline.run(spark, in, tmpDir("graft-deep-out"), "20240101T000000",
+        spark.emptyDataFrame, spark.emptyDataFrame)
+    }
+    assert(res.unclassified.isEmpty)
+    assert(res.errors.map(_.path) === Seq(deep))
+    assert(res.errors.head.message.contains("ends past byte 1024"), res.errors)
+    val occ = res.results.find(_.report == ReportType.Occupancy).get
+    assert(occ.kept.select("od").as[String].collect().toSeq === Seq("CD"))
+    assert(res.done === Seq(s"$in/b_ok.csv"))
+  }
+
+  test("S3: classifyCsv on a missing path returns None, so the file is unclassified") {
+    assert(HeaderSniffer.classifyCsv(spark, s"${tmpDir("graft-gone")}/gone.csv") === None)
   }
 
   test("pipeline run: consolidation, keep-last dedup, rejects, bad input isolated") {
@@ -256,6 +362,10 @@ class PipelineSpec extends SparkSuite {
     assert(res.results.find(_.report == ReportType.Occupancy).get.kept.count() === 1)
   }
 
+  /** Excel's column letters: 0 → A, 25 → Z, 26 → AA. */
+  private def colRef(ci: Int): String =
+    (if (ci < 26) "" else colRef(ci / 26 - 1)) + ('A' + ci % 26).toChar
+
   /** Minimal all-string workbook (rels-less fallback path): its
     * `workbook.xml` lists `listed` sheets, and only the first has a part.
     */
@@ -270,7 +380,7 @@ class PipelineSpec extends SparkSuite {
       s"""<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheets>$sheets</sheets></workbook>""")
     val body = rows.zipWithIndex.map { case (cells, ri) =>
       val cs = cells.zipWithIndex.map { case (v, ci) =>
-        s"""<c r="${('A' + ci).toChar}${ri + 1}" t="str"><v>${scala.xml.Utility.escape(v)}</v></c>"""
+        s"""<c r="${colRef(ci)}${ri + 1}" t="str"><v>${scala.xml.Utility.escape(v)}</v></c>"""
       }.mkString
       s"""<row r="${ri + 1}">$cs</row>"""
     }.mkString
@@ -371,6 +481,20 @@ class PipelineSpec extends SparkSuite {
       Pipeline.ClassifiedInput(s"$in/occ.csv", None, 0, ReportType.Occupancy),
       Pipeline.ClassifiedInput(s"$in/book.xlsx", Some(0), 1, ReportType.Occupancy)))
     assert(unclassified === Seq(s"$in/bad.xlsx", s"$in/book.xlsx#sheet1"))
+  }
+
+  test("S4: a header row with one more non-empty cell is unclassified in a CSV as in a workbook") {
+    val in = tmpDir("graft-cls-extra")
+    // Booking Payment Detailed is the widest report
+    val row = Schemas.bookingPayment.header :+ "Surprise"
+    Files.writeString(Paths.get(s"$in/bpd.csv"), row.mkString(","))
+    writeStrXlsx(s"$in/bpd.xlsx", Seq(row))
+    assert(Pipeline.classifyAll(spark, in) === ((Nil, Seq(s"$in/bpd.csv", s"$in/bpd.xlsx#sheet0"))))
+    // without the extra cell both classify
+    Files.writeString(Paths.get(s"$in/bpd.csv"), Schemas.bookingPayment.header.mkString(","))
+    writeStrXlsx(s"$in/bpd.xlsx", Seq(Schemas.bookingPayment.header))
+    assert(Pipeline.classifyAll(spark, in)._1.map(c => (c.headerIdx, c.report)) ===
+      Seq((0, ReportType.BookingPayment), (0, ReportType.BookingPayment)))
   }
 
   test("J1: a dimension key with a NULL probe value counts as missing (reference null-check parity)") {
